@@ -22,15 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def parse_predictions(
-    df: DataFrame, pred_col: str, schema: str, out: str = "parsed"
-) -> DataFrame:
-    """Parse the model's raw text into a typed column with an explicit
-    schema (malformed output → null, never an exception — the
-    PERMISSIVE posture a scoring pipeline needs)."""
-    return df.withColumn(out, F.from_json(F.col(pred_col), schema))
-
-
 def oov_count(parsed: Column, field: str, allowed: Sequence[str]) -> Column:
     """How many array elements carry a ``field`` value outside the
     ``allowed`` vocabulary (the reference's valid-options contract).

@@ -103,12 +103,6 @@ def clip(
     return df.withColumn(out or column, expr)
 
 
-def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """Explicit casts in one projection (P7 companion; single-pass idiom of
-    ``discover_schema.py:59-67``)."""
-    return df.withColumns({c: F.col(c).cast(t) for c, t in casts.items()})
-
-
 def widen_narrow_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin repartition a DataFrame whose scan produced fewer
     partitions than the cluster has slots, so downstream CPU-heavy

@@ -45,8 +45,8 @@ O(predicate hits), NOT O(group rows): matcher-only at 10M rows, 2%
 hits: 0.04 s vs 0.61 s for the per-row sweep (15x); dense
 every-row-matches worst case: 1.8 s vs 1.25 s (the one shape the
 jump pass loses, accepted for the 15x on the realistic shape).
-End-to-end probe (tools/probe_scan_hotkey.py, 20M events, 50% on one
-key): selective funnel 15.0 s = ~670k hot-rows/s through the single
+End-to-end probe (tools/probe_scan_hotkey.py, removed; see commit
+9a752ac; 20M events, 50% on one key): selective funnel 15.0 s = ~670k hot-rows/s through the single
 task — Arrow transfer + the group's pandas sort now dominate, not
 the matcher; dense 22.3 s (~450k rows/s). That is the hot-key
 ceiling. For groups beyond what one task should hold, pass

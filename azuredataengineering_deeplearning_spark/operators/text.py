@@ -135,13 +135,6 @@ def mean_token_length(col: Column | str) -> Column:
     ) / F.size(w)
 
 
-def punct_ratio(col: Column | str) -> Column:
-    """Share of non-alphanumeric, non-space characters."""
-    c = _c(col)
-    stripped = F.regexp_replace(c, r"[A-Za-z0-9\s]", "")
-    return F.length(stripped) / F.length(c)
-
-
 def quality_score(
     col: Column | str,
     stopwords: Sequence[str] = ("the", "a"),
@@ -187,12 +180,6 @@ def fingerprint(col: Column | str) -> Column:
     """Content fingerprint: md5 of the whitespace-normalized text
     (cross-engine); exact-dedup key."""
     return F.md5(F.trim(F.regexp_replace(_c(col), r"\s+", " ")))
-
-
-def fingerprint_fast(col: Column | str) -> Column:
-    """64-bit xxhash fingerprint — the scale path (8 bytes/doc of shuffle
-    instead of 32)."""
-    return F.xxhash64(F.trim(F.regexp_replace(_c(col), r"\s+", " ")))
 
 
 def word_ngrams(col: Column | str, n: int = 2, sep: str = TOKEN_SPLIT) -> Column:

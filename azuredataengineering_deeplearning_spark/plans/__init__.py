@@ -2,7 +2,6 @@
 
 from azuredataengineering_deeplearning_spark.plans.profiles import (
     CLUSTER_PROFILE,
-    LOCAL_TEST_PROFILE,
 )
 from azuredataengineering_deeplearning_spark.plans.audit import (
     executed_plan,
@@ -15,7 +14,6 @@ from azuredataengineering_deeplearning_spark.plans.audit import (
 
 __all__ = [
     "CLUSTER_PROFILE",
-    "LOCAL_TEST_PROFILE",
     "executed_plan",
     "assert_broadcast_joins",
     "assert_max_exchanges",

@@ -1,46 +1,24 @@
 """Spark configuration profiles (SURVEY §4; reference
 ``databricks_notebook_settings.sql:1-40`` distilled).
 
-``CLUSTER_PROFILE`` is the 100 TB posture: AQE owns runtime shuffle
+``CLUSTER_PROFILE`` is the 100 TB posture: the session's
+``LOCAL_PROFILE`` plus three cluster overrides. AQE owns runtime shuffle
 sizing (replacing the reference's hand-set 96/5000 partition counts),
 skew-join splitting on, Kryo + G1GC-friendly serialization, high static
-shuffle partitions that AQE coalesces down. Executor/driver sizing is
-documented here as data, not applied — it belongs to spark-submit /
-cluster config, mirroring the reference's 5-core/31 GB executors with
-dynamic allocation 18-151.
+shuffle partitions that AQE coalesces down. Executor/driver sizing
+belongs to spark-submit / cluster config (the reference runs 5-core /
+31 GB executors with dynamic allocation 18-151).
 """
 
+from azuredataengineering_deeplearning_spark.session import LOCAL_PROFILE
+
 CLUSTER_PROFILE: dict[str, str] = {
-    # Catalyst/AQE do the planning work the reference tuned by hand
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    **LOCAL_PROFILE,
     # high static count; AQE coalesces — safe for 100 TB shuffles
     "spark.sql.shuffle.partitions": "2000",
     # scan parallelism: default 128m; the reference's 16m trade is
     # compute-bound-only (documented, not default)
     "spark.sql.files.maxPartitionBytes": "134217728",
-    "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # parquet nanos handled as exact int64 (events-style sources)
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # bounded output files (reference: repartition + maxRecordsPerFile)
     "spark.sql.files.maxRecordsPerFile": "5000000",
-}
-
-# documented, not enforced: the reference's cluster shape
-CLUSTER_SIZING_NOTES = {
-    "executor": "5 cores / 31g / 3g overhead, dynamic 18-151 executors",
-    "driver": "5 cores / 52g; results capped scalar-sized by engine rules",
-    "gc": "G1GC both sides; rdd+shuffle compression on",
-}
-
-LOCAL_TEST_PROFILE: dict[str, str] = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.shuffle.partitions": "8",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.ui.enabled": "false",
 }

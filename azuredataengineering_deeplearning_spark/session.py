@@ -41,19 +41,20 @@ LOCAL_PROFILE: dict[str, str] = {
     # explicitly where the reference hints them (J1)
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     # Runtime row-level filtering (spark.sql.optimizer.runtime.
-    # bloomFilter.enabled) is a DEPLOYMENT knob, not a default: at
-    # 100 TB a bloom filter built from a selective dim side prunes
-    # fact row groups before the join, but the filter-build subqueries
-    # it injects cost more than the whole query at small scale
-    # (measured: TPC-H Q5 0.5s → 16s at sf0.001). Enable via
-    # extra_conf on clusters with selective star joins.
-    # (runtimeFilter.semiJoinReduction must stay off: on this Spark
-    # build it loops the optimizer on trivial plans.) The rule gates
+    # bloomFilter.enabled) is NOT set here, so Spark's own default
+    # applies — and on Spark 4.1.2 that default is ON. The rule gates
     # file scans on applicationSideScanSizeThreshold (default 10 GB),
-    # but it DOES fire on cached-relation application sides at any
-    # size (r14: pipeline_curate_corpus's anti-join carries two
-    # default-on bloom filters even at sf0.001) — tested in
+    # so it rarely fires at test scale, but it DOES fire on
+    # cached-relation application sides at any size (r14:
+    # pipeline_curate_corpus's anti-join carries two bloom filters even
+    # at sf0.001). When it fires on small data its filter-build
+    # subqueries can cost more than the whole query (measured: TPC-H
+    # Q5 0.5s → 16s at sf0.001); at 100 TB a
+    # filter built from a selective dim side prunes fact row groups
+    # before the join. Tested in
     # test_runtime_bloom_filter_knob_injects_pruning.
+    # (runtimeFilter.semiJoinReduction must stay off: on this Spark
+    # build it loops the optimizer on trivial plans.)
 }
 
 

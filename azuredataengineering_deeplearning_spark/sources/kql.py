@@ -214,6 +214,7 @@ Spark SQL equivalents textually.
 
 from __future__ import annotations
 
+import inspect
 import json
 import re
 
@@ -222,19 +223,35 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from azuredataengineering_deeplearning_spark.sources.readers import local_rows_df
+from azuredataengineering_deeplearning_spark.operators.spatial import (
+    geohash_center_sql,
+    geohash_neighbors_sql,
+    geohash_sql,
+    haversine_sql,
+)
 from azuredataengineering_deeplearning_spark.operators.timeseries import (
+    series_cosine_similarity_sql,
     series_decompose_anomalies_sql,
     series_decompose_forecast_sql,
     series_decompose_sql,
+    series_dot_product_sql,
+    series_fft_sql,
+    series_fill_backward_sql,
     series_fill_const_sql,
+    series_fill_forward_sql,
     series_fill_linear_sql,
+    series_fit_2lines_dynamic_sql,
     series_fit_line_sql,
+    series_fit_poly_sql,
     series_fir_sql,
+    series_ifft_sql,
     series_iir_sql,
+    series_magnitude_sql,
     series_moving_avg_sql,
     series_pearson_correlation_sql,
     series_periods_detect_sql,
     series_periods_validate_sql,
+    series_seasonal_sql,
     series_stats_dynamic_sql,
 )
 
@@ -274,41 +291,1542 @@ _KQL_TYPES = {
 }
 
 
+_SPAN = re.compile(r"(\d+)([dhms])")
+
+
 def _timespan_s(n: str, unit: str) -> int:
     return int(n) * _TIMESPAN_SECONDS[unit]
+
+
+# ---- scalar call builders -------------------------------------------
+# Each builder receives its arguments as already-translated Spark SQL
+# text (string literals still masked as \0L<i>\0) and returns Spark SQL
+# that is spliced verbatim — it is never scanned again. Builders that
+# need a literal's CONTENTS declare a keyword-only ``lits`` (the mask
+# table); ``ago`` declares ``now`` (the clock SQL). See _scan_calls.
+_MASKED = re.compile(rf"{chr(0)}L(\d+){chr(0)}")
+
+
+def _unmask(s: str, lits) -> str:
+    return _MASKED.sub(lambda m: lits[int(m.group(1))], s)
+
+
+def _lit(tok: str, lits) -> str | None:
+    """Contents of a masked string-literal argument (quotes stripped),
+    or None when the argument is not a single literal."""
+    mm = _MASKED.fullmatch(tok.strip())
+    return lits[int(mm.group(1))][1:-1] if mm else None
+
+
+def _unlit(tok: str, lits) -> str:
+    """A literal's contents, or the bare argument text (quotes
+    stripped) — for arguments Kusto accepts either way."""
+    lit = _lit(tok, lits)
+    return tok.strip().strip("'") if lit is None else lit
+
+
+def _sql_re(pat: str) -> str:
+    # backslashes doubled to survive the SQL string-literal unescape
+    return pat.replace(chr(92), chr(92) * 2)
+
+
+def _ago(span, *, now):
+    m = _SPAN.fullmatch(span)
+    if not m:
+        return f"ago({span})"
+    return f"({now} - make_interval(0,0,0,0,0,0,{_timespan_s(*m.groups())}))"
+
+
+def _bin(x, size=None):
+    # KQL bin(x, size) / floor(x, size): round down to a multiple of
+    # size. A timespan size (bin(ts, 1h)) floors to an epoch-aligned
+    # multiple of the bin in seconds; 1-arg floor is plain floor.
+    if size is None:
+        return f"floor({x})"
+    m = _SPAN.fullmatch(size)
+    if m:
+        sec = _timespan_s(*m.groups())
+        return f"timestamp_seconds(floor(unix_timestamp({x}) / {sec}) * {sec})"
+    return f"(floor({x} / {size}) * {size})"
+
+
+def _bin_at(x, size, anchor):
+    # bin_at(x, 1h, anchor): bin aligned to an arbitrary fixed point
+    # rather than the epoch
+    bm = _SPAN.fullmatch(size.strip())
+    if not bm:
+        raise ValueError(f"bin_at needs a timespan size: {size!r}")
+    sec = _timespan_s(*bm.groups())
+    a = f"unix_timestamp({anchor})"
+    return (
+        f"timestamp_seconds(floor((unix_timestamp({x}) - {a})"
+        f" / {sec}) * {sec} + {a})"
+    )
+
+
+# Calls that interpret a quoted argument: the argument must be a
+# literal; any other shape passes through under the call's own name.
+def _extract_all(p, src, *, lits):
+    # all capture-group matches as an array; the regex passes verbatim
+    # (SQL-literal backslash doubling only, like `matches regex`);
+    # Kusto's common one-group form maps to group 1
+    pat = _lit(p, lits)
+    if pat is None:
+        return f"extract_all({p}, {src})"
+    return f"regexp_extract_all({src}, '{_sql_re(pat)}', 1)"
+
+
+def _split(src, delim, *rest, lits):
+    # the KQL delimiter is a PLAIN string; Spark's split takes a regex —
+    # escape it (two-layer, as for `has`). KQL split(...)[0] indexing
+    # is handled by _rewrite_index_postfix.
+    d = _lit(delim, lits)
+    if d is None or rest:
+        return f"split({', '.join((src, delim) + rest)})"
+    return f"split({src}, '{_sql_re(re.escape(d))}', -1)"
+
+
+def _trim_fn(name, head=True, tail=True):
+    # Kusto trims a REGEX match from the ends (not a character set) —
+    # regexp_replace anchored at the ends; the regex passes verbatim
+    def build(p, src, *, lits):
+        pat = _lit(p, lits)
+        if pat is None:
+            return f"{name}({p}, {src})"
+        pat = _sql_re(pat)
+        parts = ([f"^(?:{pat})+"] if head else []) + (
+            [f"(?:{pat})+$"] if tail else []
+        )
+        return f"regexp_replace({src}, '{'|'.join(parts)}', '')"
+
+    return build
+
+
+def _dt_add(period, n, ts, *, lits):
+    # datetime_add('period', n, ts) -> timestampadd(PERIOD, n, ts).
+    # Spark's timestampadd takes the unit as an IDENTIFIER keyword;
+    # unknown periods fail loudly here rather than as an opaque
+    # Catalyst parse error.
+    unit = _lit(period, lits)
+    if unit is None:
+        return f"datetime_add({period}, {n}, {ts})"
+    unit = unit.lower()
+    if unit not in (
+        "year", "quarter", "month", "week", "day",
+        "hour", "minute", "second",
+    ):
+        raise ValueError(f"datetime_add: unsupported period {unit!r}")
+    return f"timestampadd({unit.upper()}, {n}, {ts})"
+
+
+def _countof(a, b, *, lits):
+    # countof via the length-difference identity (pure string ops, no
+    # regex). A literal term is backslash-doubled for the SQL
+    # string-literal layer (same as the has/split/trim rewrites — '\n'
+    # must reach replace()/length() verbatim) and rejected loudly if
+    # empty (a constant empty term is a query bug). A column/expression
+    # term is spliced as-is with nullif so an empty/null VALUE yields
+    # null (a data condition, not a query bug).
+    raw = _lit(b, lits)
+    if raw is not None:
+        if not raw:
+            raise ValueError("countof needs a non-empty search term")
+        t = "'" + _sql_re(raw) + "'"
+        return (
+            f"CAST((length({a}) - length(replace({a}, {t}, ''))) "
+            f"/ length({t}) AS BIGINT)"
+        )
+    return (
+        f"CAST((length({a}) - length(replace({a}, {b}, ''))) "
+        f"/ nullif(length({b}), 0) AS BIGINT)"
+    )
+
+
+def _case(*args):
+    # KQL case(p1, v1, p2, v2, ..., default) -> SQL CASE WHEN
+    if len(args) < 3 or len(args) % 2 == 0:
+        raise ValueError(f"case() needs pred,val pairs + default: {list(args)}")
+    whens = "".join(
+        f" WHEN {args[k]} THEN {args[k + 1]}"
+        for k in range(0, len(args) - 1, 2)
+    )
+    return f"CASE{whens} ELSE {args[-1]} END"
+
+
+# IPv4 family (round 10): pure bigint arithmetic over the dotted
+# quad — zero UDFs. parse_ipv4 honors an optional '/suffix' (bits
+# beyond the prefix zeroed, Kusto semantics); is_match/compare use
+# the MINIMAL of the operands' prefixes (+ the optional extra
+# prefix arg), which is the numeric least() of the masks (a
+# shorter prefix is a numerically smaller mask). format_ipv4 takes
+# the STRING form (documented dialect: Kusto also accepts longs).
+def _ip_num(a):
+    return (
+        "aggregate(transform(split(element_at(split(" + a + ", '/'),"
+        " 1), '\\\\.'), __s -> cast(__s as bigint)),"
+        " cast(0 as bigint), (__ac, __v) -> __ac * 256 + __v)"
+    )
+
+
+def _ip_mask(a):
+    return (
+        "(case when size(split(" + a + ", '/')) > 1 then"
+        " shiftleft(cast(-1 as bigint), 32 - cast(element_at(split("
+        + a + ", '/'), 2) as int)) & cast(4294967295 as bigint)"
+        " else cast(4294967295 as bigint) end)"
+    )
+
+
+def _pfx_mask(p):
+    return (
+        "(shiftleft(cast(-1 as bigint), 32 - cast(" + p + " as int))"
+        " & cast(4294967295 as bigint))"
+    )
+
+
+def _ip_min_mask(a, b, p=None):
+    # optional third arg = prefix (ipv4_is_match / ipv4_compare)
+    extra = "" if p is None else f", {_pfx_mask(p)}"
+    return f"least({_ip_mask(a)}, {_ip_mask(b)}{extra})"
+
+
+def _ipv4_in_rng(ip, rng):
+    return (
+        f"(({_ip_num(ip)} & {_ip_mask(rng)}) ="
+        f" ({_ip_num(rng)} & {_ip_mask(rng)}))"
+    )
+
+
+def _ipv4_is_match(a, b, p=None):
+    m = _ip_min_mask(a, b, p)
+    return f"(({_ip_num(a)} & {m}) = ({_ip_num(b)} & {m}))"
+
+
+def _ipv4_compare(a, b, p=None):
+    m = _ip_min_mask(a, b, p)
+    return f"cast(sign(({_ip_num(a)} & {m}) - ({_ip_num(b)} & {m})) as int)"
+
+
+def _format_ipv4(a, p=None):
+    num = (
+        f"({_ip_num(a)} & {_ip_mask(a)})"
+        if p is None
+        else f"({_ip_num(a)} & {_pfx_mask(p)})"
+    )
+    return (
+        "concat_ws('.', cast(shiftright(" + num + ", 24) & 255"
+        " as string), cast(shiftright(" + num + ", 16) & 255"
+        " as string), cast(shiftright(" + num + ", 8) & 255"
+        " as string), cast(" + num + " & 255 as string))"
+    )
+
+
+def _ipv4_priv(a):
+    # RFC 1918 blocks (10/8, 172.16/12, 192.168/16), pure bigint
+    # arithmetic. Kusto semantics: with a '/suffix' the WHOLE range
+    # must be private — check the network AND broadcast addresses of
+    # the masked range.
+    n = f"({_ip_num(a)} & {_ip_mask(a)})"
+    b = f"({n} | (cast(4294967295 as bigint) & ~{_ip_mask(a)}))"
+
+    def _inblk(x, base, bits):
+        m = (0xFFFFFFFF << (32 - bits)) & 0xFFFFFFFF
+        return f"(({x} & cast({m} as bigint)) = cast({base} as bigint))"
+
+    def _priv(x):
+        return (
+            "(" + _inblk(x, 10 << 24, 8) + " or "
+            + _inblk(x, (172 << 24) | (16 << 16), 12) + " or "
+            + _inblk(x, (192 << 24) | (168 << 16), 16) + ")"
+        )
+
+    return f"({_priv(n)} and {_priv(b)})"
+
+
+# IPv6 family (round 13): pure array/string SQL over the 8 16-bit
+# groups — zero UDFs, every parse bound ONCE via _bind1. Accepts
+# compressed ('::') IPv6, an embedded trailing IPv4 (x::a.b.c.d),
+# pure IPv4 (auto-mapped to ::ffff:a.b.c.d; a '/p' suffix maps to
+# /(96+p) in v6 space, Kusto semantics), and an optional '/NN'
+# prefix. Structurally invalid input (wrong group count, bad group
+# text, prefix out of [0,128]) -> null. compare/is_match use the
+# MINIMAL of the operands' prefixes (+ the optional extra prefix
+# arg), like the ipv4 family above; masked addresses compare as
+# fixed-width lowercase-hex strings (order-equivalent to the
+# 128-bit integer compare). Parity pinned by the round-13
+# ipaddress-module differential fuzzer (tests/test_kql_ipv6.py).
+def _v6_struct(a):
+    # -> named_struct('g', array<bigint> of 8 | null, 'p', int)
+    # __u: address part + optional numeric suffix
+    # __q: trailing dotted quad ('' when absent)
+    # __w: pure-hex form + effective prefix
+    # __h: 8 hex group strings   __g9: their numeric values
+    groups = (
+        "transform(__h6, __gx -> if(__gx rlike"
+        " '^[0-9a-fA-F]{1,4}$',"
+        " cast(conv(__gx, 16, 10) as bigint),"
+        " cast(null as bigint)))"
+    )
+    valid = (
+        "(__w6.a6 is not null and size(__g9) = 8 and not"
+        " exists(__g9, __gx -> __gx is null)"
+        " and __w6.p between 0 and 128)"
+    )
+    out = _bind1(
+        groups, "__g9",
+        f"named_struct('g', if({valid}, __g9,"
+        " cast(null as array<bigint>)), 'p', __w6.p)",
+    )
+    harr = (
+        "if(instr(__w6.a6, '::') = 0, split(__w6.a6, ':', -1),"
+        " concat("
+        " if(element_at(split(__w6.a6, '::', -1), 1) = '', array(),"
+        " split(element_at(split(__w6.a6, '::', -1), 1), ':', -1)),"
+        " array_repeat('0', 8"
+        " - size(if(element_at(split(__w6.a6, '::', -1), 1) = '',"
+        " array(), split(element_at(split(__w6.a6, '::', -1), 1),"
+        " ':', -1)))"
+        " - size(if(size(split(__w6.a6, '::', -1)) < 2 or"
+        " element_at(split(__w6.a6, '::', -1), 2) = '', array(),"
+        " split(element_at(split(__w6.a6, '::', -1), 2), ':', -1)))),"
+        " if(size(split(__w6.a6, '::', -1)) < 2 or"
+        " element_at(split(__w6.a6, '::', -1), 2) = '', array(),"
+        " split(element_at(split(__w6.a6, '::', -1), 2), ':', -1))))"
+    )
+    out = _bind1(harr, "__h6", out)
+    # embedded-v4 -> two hex groups; '' quad passes through
+    v4ok = (
+        "(size(__o4) = 4 and not exists(__o4, __ox ->"
+        " __ox is null or __ox < 0 or __ox > 255))"
+    )
+    g7 = "element_at(__o4, 1) * 256 + element_at(__o4, 2)"
+    g8 = "element_at(__o4, 3) * 256 + element_at(__o4, 4)"
+    v4hex = f"concat(lower(hex({g7})), ':', lower(hex({g8})))"
+    addr6 = _bind1(
+        "transform(split(__q4, '\\\\.', -1),"
+        " __ox -> try_cast(__ox as bigint))", "__o4",
+        "case when instr(__u6.ad, '.') = 0 then __u6.ad"
+        f" when not {v4ok} then cast(null as string)"
+        " when instr(__u6.ad, ':') = 0 then"
+        f" concat('::ffff:', {v4hex})"
+        " else concat(substr(__u6.ad, 1,"
+        f" length(__u6.ad) - length(__q4)), {v4hex}) end",
+    )
+    w = _bind1(
+        "regexp_extract(__u6.ad,"
+        " '([0-9]+\\\\.[0-9]+\\\\.[0-9]+\\\\.[0-9]+)$', 1)", "__q4",
+        f"named_struct('a6', {addr6}, 'p',"
+        " case when __u6.sx is null then 128"
+        " when instr(__u6.ad, ':') = 0 then 96 + __u6.sx"
+        " else __u6.sx end)",
+    )
+    out = _bind1(w, "__w6", out)
+    u = (
+        f"named_struct('ad', element_at(split(cast({a} as string),"
+        " '/', -1), 1), 'sx',"
+        f" if(size(split(cast({a} as string), '/', -1)) > 1,"
+        f" try_cast(element_at(split(cast({a} as string), '/', -1),"
+        " 2) as int), cast(null as int)))"
+    )
+    return _bind1(u, "__u6", out)
+
+
+def _v6_key(st, P):
+    # fixed-width hex of the 8 groups masked to prefix P
+    bits = f"greatest(least(({P}) - (__i6 - 1) * 16, 16), 0)"
+    masked = (
+        f"shiftleft(shiftright(element_at({st}.g, __i6),"
+        f" 16 - {bits}), 16 - {bits})"
+    )
+    return (
+        f"if({st}.g is null, cast(null as string),"
+        " array_join(transform(sequence(1, 8), __i6 ->"
+        f" lpad(lower(hex({masked})), 4, '0')), ':'))"
+    )
+
+
+def _parse_ipv6(a, p=None):
+    P = "__t6.p" if p is None else f"least(__t6.p, cast({p} as int))"
+    return _bind1(_v6_struct(a), "__t6", _v6_key("__t6", P))
+
+
+def _v6_pair_fn(body):
+    # ipv6_compare / ipv6_is_match: both keys at the minimal prefix
+    def build(a, b, p=None):
+        extra = "" if p is None else f", cast({p} as int)"
+        P = f"least(__ta.p, __tb.p{extra})"
+        ka, kb = _v6_key("__ta", P), _v6_key("__tb", P)
+        inner = f"named_struct('ka', {ka}, 'kb', {kb})"
+        return _bind1(
+            _v6_struct(a), "__ta",
+            _bind1(_v6_struct(b), "__tb", _bind1(inner, "__kk", body)),
+        )
+
+    return build
+
+
+def _ipv6_in_rng(ip, rng):
+    # containment at the RANGE's own prefix
+    return _bind1(
+        _v6_struct(ip), "__ta",
+        _bind1(
+            _v6_struct(rng), "__tb",
+            "case when __ta.g is null or __tb.g is null then"
+            " cast(null as boolean) else "
+            + _v6_key("__ta", "__tb.p") + " = "
+            + _v6_key("__tb", "__tb.p") + " end",
+        ),
+    )
+
+
+def _qparam_bag(x):
+    # fold the raw pairs left-to-right, dropping any earlier entry
+    # with the same key before inserting — keep-last semantics with
+    # no duplicate-key map exception possible by construction
+    q = f"try_parse_url({x}, 'QUERY')"
+    raw_v = (
+        "if(instr(__p, '=') = 0, '',"
+        " substr(__p, instr(__p, '=') + 1))"
+    )
+    val = f"coalesce(try_url_decode({raw_v}), {raw_v})"
+    return (
+        f"if(coalesce({q}, '') = '', map(), "
+        f"aggregate(split({q}, '&'),"
+        " cast(map() as map<string,string>),"
+        " (__acc, __p) -> map_concat("
+        "map_filter(__acc, (__k, __v) ->"
+        " __k != split_part(__p, '=', 1)),"
+        f" map(split_part(__p, '=', 1), {val}))))"
+    )
+
+
+def _parse_url_bag(*args):
+    # parse_url(x) -> Kusto's URL bag as a JSON string (keys Scheme /
+    # Host / Port / Path / Username / Password / Query Parameters /
+    # Fragment, exactly Kusto's, absent parts ''). Built on Spark's
+    # 2-arg parse_url part extractor (a 2-arg call passes through
+    # untouched); dotted access rides the todynamic() rewrite; the
+    # nested Query Parameters bag needs a bracket JSON path (space in
+    # the Kusto key name).
+    if len(args) != 1:
+        return f"parse_url({', '.join(args)})"
+    x = args[0]
+    ui = f"try_parse_url({x}, 'USERINFO')"
+    return (
+        "to_json(named_struct("
+        f"'Scheme', coalesce(try_parse_url({x}, 'PROTOCOL'), ''), "
+        f"'Host', coalesce(try_parse_url({x}, 'HOST'), ''), "
+        f"'Port', coalesce(regexp_extract(try_parse_url({x}, "
+        "'AUTHORITY'), ':([0-9]+)$', 1), ''), "
+        f"'Path', coalesce(try_parse_url({x}, 'PATH'), ''), "
+        f"'Username', coalesce(split_part({ui}, ':', 1), ''), "
+        f"'Password', coalesce(split_part({ui}, ':', 2), ''), "
+        # absent/empty query string -> the empty bag Kusto emits.
+        # Built by an aggregate fold (NOT str_to_map): duplicate
+        # keys (?a=1&a=2) keep-last instead of throwing under
+        # Spark's default mapKeyDedupPolicy=EXCEPTION, and values
+        # are URL-decoded like Kusto's (try_url_decode with a
+        # raw-value fallback for malformed %-escapes).
+        f"'Query Parameters', {_qparam_bag(x)}, "
+        f"'Fragment', coalesce(try_parse_url({x}, 'REF'), '')))"
+    )
+
+
+def _rot(a, n):
+    k = f"cast(pmod({n}, greatest(size({a}), 1)) as int)"
+    return (
+        f"(case when size({a}) <= 1 then {a} else"
+        f" concat(slice({a}, {k} + 1, size({a}) - {k}),"
+        f" slice({a}, 1, {k})) end)"
+    )
+
+
+def _shift(a, n, fill="null"):
+    # type-preserving pad: transform over a slice of the source so
+    # a null fill inherits the ELEMENT type (array_repeat(null, k)
+    # would mint array<void> and break the concat)
+    def pad(k):
+        return (
+            f"transform(slice({a}, 1, {k}),"
+            f" __x -> if(false, __x, {fill}))"
+        )
+
+    kl = f"least(greatest(cast({n} as int), 0), size({a}))"
+    kr = f"least(greatest(cast(-({n}) as int), 0), size({a}))"
+    return (
+        f"(case when cast({n} as int) >= 0 then"
+        f" concat(slice({a}, {kl} + 1, size({a}) - {kl}), {pad(kl)})"
+        f" else concat({pad(kr)}, slice({a}, 1, size({a}) - {kr}))"
+        " end)"
+    )
+
+
+def _array_split(a, i):
+    k = f"least(greatest(cast({i} as int), 0), size({a}))"
+    return (
+        f"array(slice({a}, 1, {k}),"
+        f" slice({a}, {k} + 1, size({a}) - {k}))"
+    )
+
+
+def _extract_json(path, src, ty=None):
+    base = f"get_json_object({src}, {path})"
+    if ty is None:
+        return base
+    tm = re.match(r"^typeof\s*\(\s*(\w+)\s*\)$", ty.strip())
+    if not tm or tm.group(1).lower() not in _KQL_TYPES:
+        raise ValueError(
+            f"extract_json: third arg must be typeof(<type>), got {ty!r}"
+        )
+    return f"try_cast({base} as {_KQL_TYPES[tm.group(1).lower()]})"
+
+
+def _series_outliers(a, kind=None, *rest, lits):
+    # Tukey-fence anomaly scores, pure array SQL. Dialect
+    # definition (documented; Kusto's exact interpolation is not
+    # published): quantiles are NEAREST-RANK over the sorted
+    # non-null elements — ctukey (default) fences at p10/p90,
+    # tukey at p25/p75; score = distance outside the fence in
+    # fence-IQR units (0 inside, null element -> null, constant
+    # series -> 0). |score| > 1.5 mild / > 3 strong, matching
+    # Kusto's reading of its own scores. Deterministic and
+    # cross-engine checkable (the oracle runs the same formula).
+    k = _unlit(kind or "'ctukey'", lits).lower()
+    if k == "ctukey":
+        lo_p, hi_p = 0.10, 0.90
+    elif k == "tukey":
+        lo_p, hi_p = 0.25, 0.75
+    else:
+        raise ValueError(
+            f"series_outliers: kind must be ctukey|tukey, got {kind!r}"
+        )
+    # bind-once discipline (same trick as series_fill_linear): the
+    # input array, its sorted copy, and the fence struct each bind
+    # ONE time — a naive textual expansion re-SORTED the array per
+    # element (O(n^2 log n) per row; a 10k-element series never
+    # finished)
+    srt = (
+        "array_sort(filter(transform(__sa,"
+        " __x -> cast(__x as double)), __x -> __x is not null))"
+    )
+
+    def q(p):
+        return (
+            f"element_at(__ss, cast(round({p} *"
+            " (size(__ss) - 1)) as int) + 1)"
+        )
+
+    fences = (
+        f"named_struct('lo', {q(lo_p)}, 'hi', {q(hi_p)},"
+        " 'n', size(__ss))"
+    )
+    per = (
+        "transform(__sa, __x -> case"
+        " when __x is null then cast(null as double)"
+        " when __qf.n = 0 or __qf.hi = __qf.lo"
+        " then cast(0 as double)"
+        " when cast(__x as double) > __qf.hi then"
+        " (cast(__x as double) - __qf.hi) / (__qf.hi - __qf.lo)"
+        " when cast(__x as double) < __qf.lo then"
+        " (cast(__x as double) - __qf.lo) / (__qf.hi - __qf.lo)"
+        " else cast(0 as double) end)"
+    )
+    body = _bind1(fences, "__qf", per)
+    body = _bind1(srt, "__ss", body)
+    return _bind1(a, "__sa", body)
+
+
+# round-13 scalar batch 7: property-bag surgery over the engine's
+# JSON-string bag form (pack()/parse_url/bag_unpack share it), set
+# similarity, hash combinators, string utilities, and the gamma
+# family. All textual rewrites to JVM built-ins — zero UDFs.
+def _jq(x):
+    # quoted+escaped JSON text of an SQL string expression: reuse
+    # to_json's escaper ({"v":<raw>} -> strip the 5-char head and
+    # the trailing brace)
+    return _bind1(
+        f"to_json(named_struct('v', {x}))", "__jq",
+        "substr(__jq, 6, length(__jq) - 6)",
+    )
+
+
+def _bag_val(j, k, sfx=""):
+    # raw JSON text of top-level key `k` of bag `j`. Objects and
+    # arrays come back verbatim from get_json_object; scalars come
+    # back UNQUOTED, so re-classify. Documented subset: the bag
+    # form is untyped JSON text, so a STRING value that itself
+    # spells a number/bool/null/object re-embeds as that type
+    # (pinned by tests); keys containing a single quote are out of
+    # the subset (they would break the JSONPath bracket form).
+    v = f"__bv{sfx}"
+    return _bind1(
+        f"get_json_object({j}, concat('$[''', {k}, ''']'))", v,
+        f"case when {v} is null then 'null'"
+        f" when {v} in ('true', 'false') then {v}"
+        f" when {v} rlike"
+        " '^-?[0-9]+(\\\\.[0-9]+)?([eE][+-]?[0-9]+)?$'"
+        f" then {v}"
+        # object/array pass-through ONLY for text that actually
+        # parses — a STRING value that merely starts with '{'/'['
+        # (e.g. '{not a bag') must re-quote, or the rebuilt bag is
+        # invalid JSON (round-13 bag-fuzzer find)
+        f" when substr({v}, 1, 1) in ('<', '[')"
+        f" and try_parse_json({v}) is not null then {v}"
+        f" else {_jq(v)} end".replace("'<'", "'{'"),
+    )
+
+
+def _bag_entry(j, k, sfx=""):
+    return f"concat({_jq(k)}, ':', {_bag_val(j, k, sfx)})"
+
+
+def _bag_merge(*bags):
+    # Kusto bag_merge: shallow, LEFTMOST bag wins per top-level key;
+    # key order pinned to first-appearance (document order). Lambda
+    # variables get suffixes above any a nested merge argument uses.
+    if len(bags) < 2:
+        raise ValueError("bag_merge needs at least 2 bags")
+    used = re.findall(r"__jx(\d+)", " ".join(bags))
+    first = 1 + max(map(int, used), default=0)
+    out = bags[0]
+    for i, y in enumerate(bags[1:], first):
+        jx, jy, mx, my = f"__jx{i}", f"__jy{i}", f"__mx{i}", f"__my{i}"
+        ent = (
+            f"concat({_jq('__bk')}, ':', if(array_contains({mx},"
+            f" __bk), {_bag_val(jx, '__bk', f'x{i}')},"
+            f" {_bag_val(jy, '__bk', f'y{i}')}))"
+        )
+        keys = (
+            f"concat({mx}, filter({my}, __bk ->"
+            f" not array_contains({mx}, __bk)))"
+        )
+        body = (
+            f"case when {mx} is null or {my} is null then"
+            " cast(null as string) else"
+            " concat('<', array_join(transform("
+            + keys + ", __bk -> " + ent + "), ','), '>') end"
+        ).replace("'<'", "'{'").replace("'>'", "'}'")
+        body = _bind1(f"json_object_keys({jy})", my, body)
+        body = _bind1(f"json_object_keys({jx})", mx, body)
+        body = _bind1(f"({y})", jy, body)
+        out = _bind1(f"({out})", jx, body)
+    return out
+
+
+def _bag_remove_keys(b, arr):
+    # top-level keys only (Kusto's JSONPath nested-removal form is
+    # out of the dialect subset, documented)
+    keep = f"filter(__mk, __bk -> not array_contains(({arr}), __bk))"
+    body = (
+        f"case when __mk is null or ({arr}) is null then"
+        " cast(null as string) else"
+        " concat('<', array_join(transform("
+        + keep + ", __bk -> " + _bag_entry("__jb", "__bk")
+        + "), ','), '>') end"
+    ).replace("'<'", "'{'").replace("'>'", "'}'")
+    body = _bind1("json_object_keys(__jb)", "__mk", body)
+    return _bind1(f"({b})", "__jb", body)
+
+
+def _bag_set_key(b, k, v):
+    # typed embed of ANY SQL value via to_json round-trip (a null
+    # value serializes the key out -> '<>' sentinel -> JSON null).
+    # An existing key updates IN PLACE; a new key appends.
+    newv = _bind1(
+        f"to_json(named_struct('v', {v}))", "__nv",
+        "if(__nv = '<>', 'null',"
+        " substr(__nv, 6, length(__nv) - 6))",
+    ).replace("'<>'", "'{}'")
+    ent = (
+        f"concat({_jq('__bk')}, ':', if(__bk = __nk, {newv},"
+        f" {_bag_val('__jb', '__bk')}))"
+    )
+    keys = (
+        "if(array_contains(__mk, __nk), __mk,"
+        " concat(__mk, array(__nk)))"
+    )
+    body = (
+        "case when __mk is null then cast(null as string) else"
+        " concat('<', array_join(transform("
+        + keys + ", __bk -> " + ent + "), ','), '>') end"
+    ).replace("'<'", "'{'").replace("'>'", "'}'")
+    body = _bind1("json_object_keys(__jb)", "__mk", body)
+    body = _bind1(f"cast(({k}) as string)", "__nk", body)
+    return _bind1(f"({b})", "__jb", body)
+
+
+# gamma/loggamma: Lanczos approximation (g=7, the classic 9-term
+# public-domain coefficient set), reflection for x < 0.5, ~1e-15
+# relative error away from the poles. loggamma stays in log space
+# so large arguments do not overflow. Differentially checked
+# against DuckDB's native gamma/lgamma by the round-13 fuzzer
+# (tests/test_kql_gamma_fuzz.py).
+_LANCZOS = [
+    "0.99999999999980993", "676.5203681218851",
+    "-1259.1392167224028", "771.32342877765313",
+    "-176.61502916214059", "12.507343278686905",
+    "-0.13857109526572012", "9.9843695780195716e-6",
+    "1.5056327351493116e-7",
+]
+
+
+def _lz_a(z):
+    terms = " + ".join(
+        f"{c} / ({z} + {i - 1})"
+        for i, c in enumerate(_LANCZOS) if i > 0
+    )
+    return f"({_LANCZOS[0]} + {terms})"
+
+
+def _gamma_pos(z):  # z >= 0.5; sqrt(2*pi) = 2.5066282746310002
+    # direct product below the double-overflow knee (most accurate);
+    # exp(loggamma) above it so gamma(1000) is a clean +Infinity
+    # instead of the inf * 0 = NaN the product form produces when pow
+    # overflows while exp underflows
+    prod = (
+        f"(2.5066282746310002 * pow({z} + 6.5, {z} - 0.5)"
+        f" * exp(-({z} + 6.5)) * {_lz_a(z)})"
+    )
+    return (
+        f"(case when {z} > 170.0 then exp({_loggamma_pos(z)})"
+        f" else {prod} end)"
+    )
+
+
+def _loggamma_pos(z):  # ln(sqrt(2*pi)) = 0.9189385332046727
+    return (
+        f"(0.9189385332046727 + ({z} - 0.5) * ln({z} + 6.5)"
+        f" - ({z} + 6.5) + ln({_lz_a(z)}))"
+    )
+
+
+def _loggamma(a):
+    return _bind1(
+        f"cast({a} as double)", "__gz",
+        "case when __gz >= 0.5 then " + _loggamma_pos("__gz")
+        # reflection: ln|Gamma(x)| = ln(pi) - ln|sin(pi x)|
+        #             - ln(Gamma(1-x));  ln(pi) = 1.1447298858494
+        + " else 1.1447298858494002 - ln(abs(sin(pi() * __gz))) - "
+        + _bind1("1e0 - __gz", "__gr", _loggamma_pos("__gr"))
+        + " end",
+    )
+
+
+def _gamma(a):
+    return _bind1(
+        f"cast({a} as double)", "__gz",
+        "case when __gz >= 0.5 then " + _gamma_pos("__gz")
+        + " else pi() / (sin(pi() * __gz) * "
+        + _bind1("1e0 - __gz", "__gr", _gamma_pos("__gr"))
+        + ") end",
+    )
+
+
+# round-13 scalar batch 8: path/CSV/duration parsing, byte
+# formatting, base64-to-bytes, guid/rand. All textual rewrites to JVM
+# built-ins — zero UDFs.
+def _parse_path(p):
+    # Kusto parse_path -> the 7-key bag (JSON-string form). Subset
+    # (documented): posix + windows paths with an optional scheme://;
+    # RootPath = a windows drive letter; ADS = the trailing :stream on
+    # the filename. Keys always present.
+    scheme = "regexp_extract(__pp, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)"
+    body = (
+        f"if({scheme} = '', __pp,"
+        f" substr(__pp, length({scheme}) + 4))"
+    )
+
+    # last separator position ('/' or '\') via the reverse trick
+    def _last_sep(v):
+        return (
+            "greatest("
+            f" if(instr(reverse({v}), '/') > 0,"
+            f"    length({v}) - instr(reverse({v}), '/') + 1, 0),"
+            f" if(instr(reverse({v}), '\\\\') > 0,"
+            f"    length({v}) - instr(reverse({v}), '\\\\') + 1,"
+            " 0))"
+        )
+
+    fname = "substr(__pb, __ls + 1)"
+    # root-anchored paths keep the root separator ('/f' -> '/',
+    # 'C:\\f' -> 'C:\\') like posixpath/ntpath dirname — the
+    # round-13 stdlib fuzzer's find
+    dpath = (
+        "case when __ls = 0 then ''"
+        " when __ls = 1 then substr(__pb, 1, 1)"
+        " when regexp_extract(substr(__pb, 1, __ls - 1),"
+        " '^[A-Za-z]:$', 0) != '' then substr(__pb, 1, __ls)"
+        " else substr(__pb, 1, __ls - 1) end"
+    )
+    dname = "substr(__dp, " + _last_sep("__dp") + " + 1)"
+    file_noads = "split_part(__fn, ':', 1)"
+    ads = (
+        "if(instr(__fn, ':') > 0,"
+        " substr(__fn, instr(__fn, ':') + 1), '')"
+    )
+    ext = "regexp_extract(" + file_noads + ", '\\\\.([^.]+)$', 1)"
+    root = "regexp_extract(__pb, '^([A-Za-z]:)', 1)"
+    bag = (
+        "concat('<',"
+        f" '\"Scheme\":', {_jq(scheme)}, ',',"
+        f" '\"RootPath\":', {_jq(root)}, ',',"
+        f" '\"DirectoryPath\":', {_jq('__dp')}, ',',"
+        f" '\"DirectoryName\":', {_jq(dname)}, ',',"
+        f" '\"Filename\":', {_jq(file_noads)}, ',',"
+        f" '\"Extension\":', {_jq(ext)}, ',',"
+        f" '\"AlternateDataStream\":', {_jq(ads)},"
+        " '>')"
+    ).replace("'<'", "'{'").replace("'>'", "'}'")
+    out = _bind1(dpath, "__dp", bag)
+    out = _bind1(fname, "__fn", out)
+    out = _bind1(_last_sep("__pb"), "__ls", out)
+    out = _bind1(body, "__pb", out)
+    return _bind1(f"cast({p} as string)", "__pp", out)
+
+
+def _format_bytes(sz, prec="0", units=None):
+    # 1024-based humanize
+    u = (
+        "case when __fb >= 1125899906842624 then 'PB'"
+        " when __fb >= 1099511627776 then 'TB'"
+        " when __fb >= 1073741824 then 'GB'"
+        " when __fb >= 1048576 then 'MB'"
+        " when __fb >= 1024 then 'KB' else 'Bytes' end"
+        if units is None
+        else f"upper(cast({units} as string))"
+    )
+    div = (
+        "case " + u + " when 'PB' then 1125899906842624"
+        " when 'TB' then 1099511627776 when 'GB' then 1073741824"
+        " when 'MB' then 1048576 when 'KB' then 1024"
+        " else 1 end"
+    )
+    return _bind1(
+        f"cast({sz} as double)", "__fb",
+        "concat(regexp_replace(cast(round(__fb / " + div
+        + f", cast({prec} as int)) as string),"
+        " '\\\\.0+$', ''), ' ', " + u + ")",
+    )
+
+
+def _format_timespan(x, pat, *, lits):
+    # the pattern is a constant literal compiled at translate time
+    # into one concat of lpad'd integer pieces — d+/h+/m+/s+/f+ runs,
+    # everything else a literal separator. Timespans are the engine's
+    # SECONDS unit; negative values emit a '-' prefix over the
+    # absolute value.
+    p = _lit(pat, lits)
+    if p is None:
+        raise ValueError(
+            "format_timespan needs a constant pattern literal, got "
+            f"{pat!r}"
+        )
+    units = {
+        "d": "floor(__ft / 86400)", "h": "floor(__ft / 3600) % 24",
+        "m": "floor(__ft / 60) % 60", "s": "floor(__ft) % 60",
+    }
+    parts: list[str] = []
+    for m in re.finditer(r"(.)\1*", p, re.S):
+        c, n = m.group(1), len(m.group(0))
+        if c in units:
+            parts.append(
+                f"lpad(cast(cast({units[c]} as bigint)"
+                f" as string), {n}, '0')"
+            )
+        elif c == "f":
+            scale = 10 ** n
+            parts.append(
+                f"lpad(cast(cast(floor(__ft * {scale}) % {scale}"
+                f" as bigint) as string), {n}, '0')"
+            )
+        else:
+            parts.append("'" + m.group(0).replace("'", "''") + "'")
+    body = f"concat(if(__fs < 0, '-', ''), {', '.join(parts)})"
+    body = _bind1("abs(__fs)", "__ft", body)
+    return _bind1(f"cast(({x}) as double)", "__fs", body)
+
+
+# convert_* unit family: both units must be constants (masked
+# literals) — resolved to exact SI factors at TRANSLATE time, so the
+# emitted SQL is one multiply (temperature: one affine chain). Unit
+# names follow Kusto's (UnitsNet) spelling, matched
+# case-insensitively; an unknown unit raises loudly with the family's
+# unit list. Documented subset of the common units.
+_UNIT_FAMILIES: dict[str, dict] = {
+    "length": {
+        "meter": 1.0, "kilometer": 1000.0, "centimeter": 0.01,
+        "millimeter": 0.001, "micrometer": 1e-6, "nanometer": 1e-9,
+        "mile": 1609.344, "yard": 0.9144, "foot": 0.3048,
+        "inch": 0.0254, "nauticalmile": 1852.0,
+    },
+    "mass": {
+        "kilogram": 1.0, "gram": 0.001, "milligram": 1e-6,
+        "tonne": 1000.0, "pound": 0.45359237,
+        "ounce": 0.028349523125, "stone": 6.35029318,
+    },
+    "speed": {
+        "meterpersecond": 1.0, "kilometerperhour": 1.0 / 3.6,
+        "mileperhour": 0.44704, "knot": 1852.0 / 3600.0,
+        "footpersecond": 0.3048,
+    },
+    "angle": {
+        "radian": 1.0, "degree": 3.141592653589793 / 180.0,
+        "gradian": 3.141592653589793 / 200.0,
+        "revolution": 2.0 * 3.141592653589793,
+    },
+    "energy": {
+        "joule": 1.0, "kilojoule": 1000.0, "calorie": 4.184,
+        "kilocalorie": 4184.0, "watthour": 3600.0,
+        "kilowatthour": 3.6e6,
+        "britishthermalunit": 1055.05585262,
+    },
+    "force": {
+        "newton": 1.0, "kilonewton": 1000.0,
+        "poundforce": 4.4482216152605, "dyn": 1e-5,
+        "kilogramforce": 9.80665,
+    },
+    "volume": {
+        "cubicmeter": 1.0, "liter": 0.001, "milliliter": 1e-6,
+        "cubicfoot": 0.028316846592,
+        "cubicinch": 1.6387064e-5, "usgallon": 0.003785411784,
+        "imperialgallon": 0.00454609,
+    },
+    # affine: through Kelvin (to-Kelvin form, from-Kelvin form)
+    "temperature": {
+        "kelvin": ("(cast({x} as double))", "({k})"),
+        "degreecelsius": (
+            "(cast({x} as double) + 273.15)", "(({k}) - 273.15)"
+        ),
+        "degreefahrenheit": (
+            "((cast({x} as double) + 459.67) * 5 / 9)",
+            "(({k}) * 9 / 5 - 459.67)",
+        ),
+    },
+}
+
+
+def _convert_fn(family):
+    units = _UNIT_FAMILIES[family]
+
+    def unit(tok, lits):
+        u = _lit(tok, lits)
+        if u is None:
+            raise ValueError(
+                f"convert_{family} needs constant unit literals, got"
+                f" {tok!r}"
+            )
+        u = u.strip().lower()
+        if u not in units:
+            raise ValueError(
+                f"convert_{family}: unknown unit {u!r}"
+                f" (supported: {sorted(units)})"
+            )
+        return units[u]
+
+    def conv(x, ufrom, uto, *, lits):
+        f, t = unit(ufrom, lits), unit(uto, lits)
+        if family == "temperature":
+            return t[1].format(k=f[0].format(x=x))
+        return f"(cast({x} as double) * {f!r} / {t!r})"
+
+    return conv
+
+
+# series_decompose family (round 12): trend-then-seasonal one-pass
+# decomposition, forecast on a training prefix, top-ACF period
+# detection — see operators/timeseries.py for the dialect notes.
+# The trend argument is a quoted literal in Kusto.
+def _trend(trend, lits):
+    return _unlit(trend, lits) if trend and trend.strip() else "linefit"
+
+
+def _series_decompose(a, period=None, trend=None, *rest, lits):
+    if rest:
+        raise ValueError(
+            "series_decompose: only (series [, period [, trend]]) "
+            "is supported (no test_points/seasonality_threshold)"
+        )
+    return series_decompose_sql(
+        a, (period or "-1").strip() or "-1", _trend(trend, lits)
+    )
+
+
+def _series_decompose_forecast(a, points, period=None, trend=None, *rest,
+                               lits):
+    if rest:
+        raise ValueError(
+            "series_decompose_forecast: only (series, points "
+            "[, period [, trend]]) is supported"
+        )
+    return series_decompose_forecast_sql(
+        a, points, (period or "-1").strip() or "-1", _trend(trend, lits)
+    )
+
+
+def _series_decompose_anomalies(a, k=None, period=None, trend=None, *rest,
+                                lits):
+    if rest:
+        raise ValueError(
+            "series_decompose_anomalies: only (series [, threshold "
+            "[, period [, trend]]]) is supported"
+        )
+    return series_decompose_anomalies_sql(
+        a,
+        (k or "1.5").strip() or "1.5",
+        (period or "0").strip() or "0",
+        _trend(trend, lits),
+    )
+
+
+def _dt_diff(unit, a, b, *, lits):
+    # datetime_diff counts period BOUNDARIES crossed (Kusto/DuckDB
+    # date_diff convention, NOT elapsed units): truncate both operands
+    # to the period before differencing. Weeks are ISO-Monday here
+    # (Kusto weeks start Sunday).
+    u = _unlit(unit, lits).upper()
+    return (
+        f"timestampdiff({u}, date_trunc('{u}', {b}),"
+        f" date_trunc('{u}', {a}))"
+    )
+
+
+def _series_map(t):
+    # elementwise series function: pure transform, O(n) per row
+    return lambda a: f"transform({a}, __x -> cast({t} as double))"
+
+
+def _series_zip(t):
+    # elementwise binary series function over equal-length arrays
+    return lambda a, b: f"zip_with({a}, {b}, (__x, __y) -> {t})"
+
+
+#: KQL function name -> Spark SQL. A string value is a plain rename
+#: (arguments pass through); a callable builds the SQL from the
+#: translated arguments. Order is irrelevant: _scan_calls translates
+#: every call exactly once, inside-out.
+_CALLS: dict[str, object] = {
+    # casts, clock, binning, case(), literals
+    "tostring": lambda a: f"cast({a} as string)",
+    "todouble": lambda a: f"cast({a} as double)",
+    "tolong": lambda a: f"cast({a} as bigint)",
+    "toint": lambda a: f"cast({a} as int)",
+    "tobool": lambda a: f"cast({a} as boolean)",
+    "todatetime": lambda a: f"cast({a} as timestamp)",
+    "todecimal": lambda a: f"cast({a} as decimal(38,18))",
+    "datetime": lambda text: f"timestamp'{text}'",
+    "ago": _ago,
+    "bin": _bin,
+    "floor": _bin,  # Kusto floor IS bin
+    "bin_at": _bin_at,
+    "case": _case,
+    "pack_all": lambda: "to_json(struct(*))",
+    "new_guid": lambda: "uuid()",
+    # rand()/rand(n): nondeterministic by definition (like Kusto);
+    # deterministic sampling paths use the hash twins instead
+    "rand": lambda n=None: (
+        "rand()" if n is None else f"cast(floor(rand() * ({n})) as bigint)"
+    ),
+    # string functions; KQL string indexing is 0-BASED: substring /
+    # indexof shift by one against Spark's 1-based substr/instr
+    # (instr's 0-means-absent becomes KQL's -1 for free)
+    "iff": "if",
+    "iif": "if",
+    "strcat": "concat",
+    "strcat_delim": "concat_ws",
+    "tolower": "lower",
+    "toupper": "upper",
+    "strlen": "length",
+    "string_size": "octet_length",  # BYTES (length() is characters)
+    # extract's regex literal passes verbatim (no backslash doubling)
+    "extract": lambda p, g, src: f"regexp_extract({src}, {p}, {g})",
+    "extract_all": _extract_all,
+    "split": _split,
+    "trim": _trim_fn("trim"),
+    "trim_start": _trim_fn("trim_start", tail=False),
+    "trim_end": _trim_fn("trim_end", head=False),
+    "countof": _countof,
+    "replace_string": lambda a, b, c: f"replace({a}, {b}, {c})",
+    "substring": lambda a, b, c=None: (
+        f"substr({a}, CAST({b} AS INT) + 1"
+        + (f", CAST({c} AS INT))" if c is not None else ")")
+    ),
+    "indexof": lambda a, b: f"(instr({a}, {b}) - 1)",
+    "indexof_regex": lambda a, p: f"(regexp_instr({a}, {p}) - 1)",
+    "countof_regex": lambda a, p: f"regexp_count({a}, {p})",
+    "replace_regex": lambda a, p, r: f"regexp_replace({a}, {p}, {r})",
+    "replace_strings": lambda a, f, r: (
+        f"(case when size({f}) = 0 then {a} else"
+        f" aggregate(sequence(1, size({f})), {a},"
+        f" (__acc, __i) -> replace(__acc,"
+        f" element_at({f}, __i), element_at({r}, __i))) end)"
+    ),
+    # Kusto translate(searchList, replacementList, text) — Spark wants
+    # (text, from, to)
+    "translate": lambda a, b, c: f"translate({c}, {a}, {b})",
+    "strcmp": lambda a, b: _bind1(
+        f"named_struct('a', cast({a} as string),"
+        f" 'b', cast({b} as string))", "__sc",
+        "case when __sc.a is null or __sc.b is null then"
+        " cast(null as int) when __sc.a < __sc.b then -1"
+        " when __sc.a > __sc.b then 1 else 0 end",
+    ),
+    # strrep: multiplier < 1 -> '' (Kusto errors; pinned lenient —
+    # parse-time rejection is reserved for structural query bugs)
+    "strrep": lambda v, n, d=None: (
+        f"if(cast({n} as int) < 1, '', array_join(transform("
+        f"sequence(1, greatest(cast({n} as int), 1)),"
+        f" __i -> cast({v} as string)), {d if d is not None else chr(39) * 2}))"
+    ),
+    "isascii": lambda a: (
+        f"coalesce(cast({a} as string) rlike"
+        " '^[\\\\x00-\\\\x7f]*$', false)"
+    ),
+    # every Spark string IS valid UTF-8; null -> false like Kusto
+    "isutf8": lambda a: f"(cast({a} as string) is not null)",
+    "isnotempty": lambda a: f"({a} IS NOT NULL AND {a} != '')",
+    "isempty": lambda a: f"({a} IS NULL OR {a} = '')",
+    "isnotnull": lambda a: f"({a} IS NOT NULL)",
+    "isnull": lambda a: f"({a} IS NULL)",
+    # tohex: Kusto emits lowercase; Spark hex() is uppercase
+    "tohex": lambda a: f"lower(hex({a}))",
+    # url_encode/url_decode keep their names (Kusto's form-encoding ==
+    # Spark's java.net.URLEncoder semantics, space -> '+')
+    "base64_encode_tostring": lambda a: f"base64(cast({a} as binary))",
+    "base64_decode_tostring": lambda a: f"cast(unbase64({a}) as string)",
+    # base64 -> byte array (ints 0-255), via the hex round trip
+    "base64_decode_toarray": lambda a: _bind1(
+        f"hex(unbase64({a}))", "__hb",
+        # empty guard: sequence(1, 0) DESCENDS in Spark
+        "if(length(__hb) = 0, array(),"
+        " transform(sequence(1, length(__hb) div 2), __i ->"
+        " cast(conv(substr(__hb, __i * 2 - 1, 2), 16, 10)"
+        " as bigint)))",
+    ),
+    # parse_version: Kusto emits a comparable decimal; this engine
+    # emits the ORDER-EQUIVALENT canonical string (each of 4 dot
+    # segments zero-padded to 8, missing segments = 0) —
+    # cross-engine checkable, sorts identically (documented deviation)
+    "parse_version": lambda a: (
+        "array_join(transform(slice(concat(split(" + a + ", '\\\\.'),"
+        " array('0', '0', '0')), 1, 4), __x -> lpad(__x, 8, '0')), '.')"
+    ),
+    # parse_csv: one RFC-4180 record -> array of fields (quoted fields
+    # may contain commas; "" unescapes). Single-line subset.
+    "parse_csv": lambda a: (
+        "transform(regexp_extract_all(concat(',', cast(" + a
+        + " as string)), ',(\"(?:[^\"]|\"\")*\"|[^,]*)', 1),"
+        " __f -> if(substr(__f, 1, 1) = '\"',"
+        " replace(substr(__f, 2, length(__f) - 2), '\"\"', '\"'),"
+        " __f))"
+    ),
+    "parse_path": _parse_path,
+    "parse_url": _parse_url_bag,
+    "format_bytes": _format_bytes,
+    # totimespan: the string form '[d.]hh:mm:ss[.fff]' -> SECONDS (the
+    # engine's timespan unit, fractional kept); invalid -> null
+    "totimespan": lambda a: _bind1(
+        f"cast({a} as string)", "__tt",
+        "if(regexp_extract(__tt,"
+        " '^(?:\\\\d+\\\\.)?\\\\d{1,2}:\\\\d{1,2}:\\\\d{1,2}"
+        "(?:\\\\.\\\\d+)?$', 0) = '', cast(null as double),"
+        " coalesce(try_cast(regexp_extract(__tt,"
+        " '^(\\\\d+)\\\\.', 1) as double), 0e0) * 86400"
+        " + cast(regexp_extract(__tt,"
+        " '(\\\\d{1,2}):\\\\d{1,2}:\\\\d{1,2}', 1) as double)"
+        " * 3600"
+        " + cast(regexp_extract(__tt, ':(\\\\d{1,2}):', 1)"
+        " as double) * 60"
+        " + cast(regexp_extract(__tt, ':(\\\\d{1,2})(?:\\\\.|$)',"
+        " 1) as double)"
+        " + coalesce(try_cast(concat('0.', regexp_extract(__tt,"
+        " ':\\\\d{1,2}\\\\.(\\\\d+)$', 1)) as double), 0e0))",
+    ),
+    "format_timespan": _format_timespan,
+    # has_any_index(text, terms): 0-based index of the FIRST term the
+    # text contains, -1 if none (Kusto)
+    "has_any_index": lambda t, arr: _bind1(
+        f"cast({t} as string)", "__hx",
+        "coalesce(try_element_at(filter(transform(" + arr + ","
+        " (__e, __i) -> if(instr(__hx, cast(__e as string)) > 0,"
+        " __i, cast(null as int))), __i -> __i is not null), 1),"
+        " -1)",
+    ),
+    # hashes: hash(x[, mod]) maps to Spark's xxhash64 (same family,
+    # DIFFERENT seed/values than Kusto; stable within the engine,
+    # documented dialect deviation); hash_combine/hash_many -> one
+    # xxhash64 over all the arguments
+    "hash": lambda a, m=None: (
+        f"pmod(xxhash64({a}), {m})" if m is not None else f"xxhash64({a})"
+    ),
+    "hash_combine": "xxhash64",
+    "hash_many": "xxhash64",
+    "hash_sha256": lambda a: f"sha2({a}, 256)",
+    "hash_sha1": lambda a: f"sha1({a})",
+    "hash_md5": lambda a: f"md5({a})",
+    # HLL sketch scalars (pair with summarize hll()/hll_merge()):
+    # dcount_hll(sketch) -> estimate; 2-arg hll_merge(a, b) -> union
+    "dcount_hll": "hll_sketch_estimate",
+    "hll_merge": "hll_union",
+    # math and bitwise
+    "min_of": "least",
+    "max_of": "greatest",
+    "ceiling": "ceil",
+    "exp2": lambda a: f"pow(cast(2 as double), {a})",
+    "isfinite": lambda a: (
+        f"(NOT isnan({a}) AND abs({a}) != double('Infinity'))"
+    ),
+    "isinf": lambda a: f"(abs({a}) = double('Infinity'))",
+    "gamma": _gamma,
+    "loggamma": _loggamma,
+    "binary_and": lambda a, b: f"({a} & {b})",
+    "binary_or": lambda a, b: f"({a} | {b})",
+    "binary_xor": lambda a, b: f"({a} ^ {b})",
+    "binary_not": lambda a: f"(~({a}))",
+    "binary_shift_left": lambda a, n: f"shiftleft({a}, {n})",
+    "binary_shift_right": lambda a, n: f"shiftright({a}, {n})",
+    "bitset_count_ones": "bit_count",
+    # calendar (KQL weeks start Sunday — Spark dayofweek: Sun=1).
+    # dayofweek: Kusto returns a timespan of whole days since Sunday
+    # (0=Sun..6=Sat); the int-days form is what queries consume.
+    "dayofweek": lambda a: f"(dayofweek({a}) - 1)",
+    "startofday": lambda a: f"date_trunc('DAY', {a})",
+    "startofweek": lambda a: (
+        f"cast(date_sub(cast({a} as date), dayofweek({a}) - 1) as timestamp)"
+    ),
+    "startofmonth": lambda a: f"date_trunc('MONTH', {a})",
+    "startofyear": lambda a: f"date_trunc('YEAR', {a})",
+    # endof*: last representable instant (micro grain)
+    "endofday": lambda a: (
+        f"(date_trunc('DAY', {a}) + interval 1 day - interval 1 microsecond)"
+    ),
+    "endofmonth": lambda a: (
+        f"(cast(last_day({a}) as timestamp) + interval 1 day"
+        " - interval 1 microsecond)"
+    ),
+    "endofyear": lambda a: (
+        f"(date_trunc('YEAR', {a}) + interval 1 year"
+        " - interval 1 microsecond)"
+    ),
+    "getyear": lambda a: f"year({a})",
+    "getmonth": lambda a: f"month({a})",
+    "monthofyear": "month",
+    "week_of_year": "weekofyear",  # both ISO 8601
+    "hourofday": lambda a: f"hour({a})",
+    "format_datetime": "date_format",
+    "datetime_add": _dt_add,
+    "datetime_diff": _dt_diff,
+    # dynamic arrays and bags. Kusto set_* return unordered sets; the
+    # engine pins SORTED output (documented deviation — deterministic
+    # and cross-engine checkable)
+    "pack": lambda *args: f"to_json(named_struct({', '.join(args)}))",
+    "pack_array": "array",
+    "array_concat": "concat",
+    "array_reverse": "reverse",
+    "strcat_array": "array_join",
+    "array_length": lambda a: f"cast(size({a}) as bigint)",
+    "array_sort_asc": lambda a: f"sort_array({a})",
+    "array_sort_desc": lambda a: f"sort_array({a}, false)",
+    # array_slice(arr, start, end): Kusto END-INCLUSIVE 0-based ->
+    # Spark slice(arr, start+1, length)
+    "array_slice": lambda a, b, c: (
+        f"slice({a}, CAST({b} AS INT) + 1,"
+        f" CAST({c} AS INT) - CAST({b} AS INT) + 1)"
+    ),
+    # array_index_of: 0-based position, -1 absent (array_position is
+    # 1-based, 0 absent)
+    "array_index_of": lambda a, b: f"(array_position({a}, {b}) - 1)",
+    "array_rotate_left": _rot,
+    "array_rotate_right": lambda a, n: _rot(a, f"-({n})"),
+    "array_shift_left": _shift,
+    "array_shift_right": lambda a, n, fill="null": _shift(a, f"-({n})", fill),
+    "array_split": _array_split,
+    # array branches only (Kusto also allows scalar branches; a scalar
+    # cannot be distinguished textually — documented subset). Length
+    # mismatches yield null elements via try_element_at, like Kusto.
+    "array_iff": lambda c, t, f: (
+        f"transform({c}, (__c, __i) -> if(__c,"
+        f" try_element_at({t}, __i + 1),"
+        f" try_element_at({f}, __i + 1)))"
+    ),
+    "set_union": lambda a, b: f"sort_array(array_union({a}, {b}))",
+    "set_intersect": lambda a, b: f"sort_array(array_intersect({a}, {b}))",
+    "set_difference": lambda a, b: f"sort_array(array_except({a}, {b}))",
+    "set_has_element": lambda a, x: f"array_contains({a}, {x})",
+    # jaccard_index over dynamic arrays (set semantics; the empty/empty
+    # pair is 1.0 by the standard convention). size() may report null
+    # or -1 for a null array depending on the legacy flag — both map
+    # to null out.
+    "jaccard_index": lambda a, b: _bind1(
+        f"named_struct('i', size(array_intersect({a}, {b})),"
+        f" 'u', size(array_union({a}, {b})))", "__ji",
+        "case when __ji.i is null or __ji.u is null"
+        " or __ji.i < 0 or __ji.u < 0 then cast(null as double)"
+        " when __ji.u = 0 then cast(1.0 as double)"
+        " else cast(__ji.i as double) / __ji.u end",
+    ),
+    "extract_json": _extract_json,
+    "bag_keys": lambda b: f"json_object_keys({b})",
+    "bag_merge": _bag_merge,
+    "bag_remove_keys": _bag_remove_keys,
+    "bag_set_key": _bag_set_key,
+    # IPv4 / IPv6
+    "parse_ipv4": lambda a: f"({_ip_num(a)} & {_ip_mask(a)})",
+    "ipv4_is_in_range": _ipv4_in_rng,
+    "ipv4_is_in_any_range": lambda ip, *rngs: (
+        "(" + " or ".join(_ipv4_in_rng(ip, r) for r in rngs) + ")"
+    ),
+    "ipv4_is_match": _ipv4_is_match,
+    "ipv4_compare": _ipv4_compare,
+    "ipv4_netmask_suffix": lambda a: (
+        "(case when size(split(" + a + ", '/')) > 1 then"
+        " cast(element_at(split(" + a + ", '/'), 2) as int)"
+        " else 32 end)"
+    ),
+    "ipv4_is_private": _ipv4_priv,
+    "format_ipv4": _format_ipv4,
+    "parse_ipv6": _parse_ipv6,
+    "parse_ipv6_mask": lambda a, p: _parse_ipv6(a, p),
+    "ipv6_compare": _v6_pair_fn(
+        "case when __kk.ka is null or __kk.kb is null then"
+        " cast(null as int) when __kk.ka < __kk.kb then -1"
+        " when __kk.ka > __kk.kb then 1 else 0 end"
+    ),
+    "ipv6_is_match": _v6_pair_fn(
+        "case when __kk.ka is null or __kk.kb is null then"
+        " cast(null as boolean) else __kk.ka = __kk.kb end"
+    ),
+    "ipv6_is_in_range": _ipv6_in_rng,
+    "ipv6_is_in_any_range": lambda ip, *rngs: (
+        "(" + " or ".join(_ipv6_in_rng(ip, r) for r in rngs) + ")"
+    ),
+    # geo: geo_distance_2points(lon1, lat1, lon2, lat2) -> meters.
+    # Spherical haversine on the IUGG mean radius (Kusto computes WGS84
+    # geodesic — sub-0.5% deviation, documented; cross-engine exact
+    # because both sides run the same formula). The geohash family
+    # (operators/spatial.py) is closed-form encode/decode — zero UDFs,
+    # equi-joinable cell ids.
+    "geo_distance_2points": lambda lo1, la1, lo2, la2: (
+        "(2 * 6371008.8 * asin(sqrt("
+        f"pow(sin((radians({la2}) - radians({la1})) / 2), 2)"
+        f" + cos(radians({la1})) * cos(radians({la2}))"
+        f" * pow(sin((radians({lo2}) - radians({lo1})) / 2), 2))))"
+    ),
+    "geo_point_to_geohash": lambda lon, lat, p="5": geohash_sql(lon, lat, p),
+    "geo_geohash_neighbors": geohash_neighbors_sql,
+    "geo_geohash_to_central_point": geohash_center_sql,
+    "geo_point_in_circle": lambda plon, plat, clon, clat, r: (
+        f"({haversine_sql(plon, plat, clon, clat)}"
+        f" <= CAST(({r}) AS DOUBLE))"
+    ),
+    # series_* over make-series arrays: pure higher-order array SQL
+    # (operators/timeseries.py builders), zero shuffles. Elementwise
+    # arithmetic casts to double so int and double series mix; divide
+    # uses try_divide so a zero element yields null, not an ANSI error.
+    "series_sum": lambda a: (
+        f"aggregate({a}, cast(0 as double),"
+        " (__a, __x) -> __a + coalesce(cast(__x as double),"
+        " cast(0 as double)))"
+    ),
+    "series_product": lambda a: (
+        f"aggregate({a}, cast(1 as double),"
+        " (__a, __x) -> __a * coalesce(cast(__x as double),"
+        " cast(1 as double)))"
+    ),
+    **{
+        f"series_{fn}": _series_map(f"{sql}(__x)")
+        for fn, sql in (
+            ("floor", "floor"), ("ceiling", "ceil"), ("round", "round"),
+            ("sign", "sign"),
+        )
+    },
+    **{
+        f"series_{fn}": _series_map(sql)
+        for fn, sql in (
+            ("abs", "abs(__x)"),
+            ("exp", "exp(__x)"),
+            ("log", "ln(__x)"),
+            ("not", "cast(NOT cast(__x as boolean) as double)"),
+            ("cos", "cos(cast(__x as double))"),
+            ("sin", "sin(cast(__x as double))"),
+            ("tan", "tan(cast(__x as double))"),
+            ("acos", "acos(cast(__x as double))"),
+            ("asin", "asin(cast(__x as double))"),
+            ("atan", "atan(cast(__x as double))"),
+        )
+    },
+    **{
+        f"series_{fn}": _series_zip(f"__x {op} __y")
+        for fn, op in (
+            ("equals", "="), ("not_equals", "!="),
+            ("greater", ">"), ("less", "<"),
+            ("greater_equals", ">="), ("less_equals", "<="),
+        )
+    },
+    **{
+        f"series_{fn}": _series_zip(f"cast({sql} as double)")
+        for fn, sql in (
+            ("add", "cast(__x as double) + cast(__y as double)"),
+            ("subtract", "cast(__x as double) - cast(__y as double)"),
+            ("multiply", "cast(__x as double) * cast(__y as double)"),
+            ("divide",
+             "try_divide(cast(__x as double), cast(__y as double))"),
+            # NaN on 0^negative etc. follows Spark's pow (IEEE)
+            ("pow", "pow(cast(__x as double), cast(__y as double))"),
+        )
+    },
+    "series_outliers": _series_outliers,
+    "series_decompose": _series_decompose,
+    "series_decompose_forecast": _series_decompose_forecast,
+    "series_decompose_anomalies": _series_decompose_anomalies,
+    "series_periods_detect": series_periods_detect_sql,
+    "series_periods_validate": series_periods_validate_sql,
+    "series_pearson_correlation": series_pearson_correlation_sql,
+    "series_fit_line_dynamic": series_fit_line_sql,
+    "series_fit_2lines_dynamic": series_fit_2lines_dynamic_sql,
+    "series_fit_poly": series_fit_poly_sql,
+    "series_fft": series_fft_sql,
+    "series_ifft": series_ifft_sql,
+    "series_dot_product": series_dot_product_sql,
+    "series_magnitude": series_magnitude_sql,
+    "series_cosine_similarity": series_cosine_similarity_sql,
+    "series_seasonal": series_seasonal_sql,
+    "series_fill_forward": series_fill_forward_sql,
+    "series_fill_backward": series_fill_backward_sql,
+    "series_stats_dynamic": series_stats_dynamic_sql,
+    "series_fill_linear": series_fill_linear_sql,
+    "series_fill_const": series_fill_const_sql,
+    "series_moving_avg": series_moving_avg_sql,
+    "series_fir": series_fir_sql,
+    "series_iir": series_iir_sql,
+    # unit conversion
+    **{f"convert_{fam}": _convert_fn(fam) for fam in _UNIT_FAMILIES},
+}
+
+
+# one call head or one raw quoted literal (skipped whole)
+_CALL_HEAD = re.compile(r"'[^']*'|\"[^\"]*\"|\b([A-Za-z_]\w*)\s*\(")
+_ARG_PUNCT = re.compile(r"[(),'\"]")
+
+
+def _call_args(s: str, lo: int, hi: int):
+    """From just after a call's ``(``, find its matching ``)`` and the
+    (start, end) span of every top-level comma-separated argument
+    (quote-aware; a blank last argument is dropped, like _split_csv).
+    Returns ``(close, spans)``; ``close`` is None when unbalanced."""
+    spans, depth, start, k = [], 0, lo, lo
+    while m := _ARG_PUNCT.search(s, k, hi):
+        ch, k = m.group(), m.end()
+        if ch in "'\"":
+            q = s.find(ch, k, hi)
+            k = hi if q < 0 else q + 1
+        elif ch == "(":
+            depth += 1
+        elif ch == "," and depth == 0:
+            spans.append((start, k - 1))
+            start = k
+        elif ch == ")":
+            if depth == 0:
+                if s[start:k - 1].strip():
+                    spans.append((start, k - 1))
+                return k - 1, spans
+            depth -= 1
+    return None, spans
+
+
+def _scan_calls(s: str, calls: dict, lits=(), now=None) -> str:
+    """Translate every registered ``name(args)`` call of ``s`` in ONE
+    left-to-right pass. Arguments are translated first (inside-out),
+    then the builder runs and its output is spliced — it is never
+    scanned again, so one builder's SQL cannot be re-read as another
+    function's input. Unregistered calls stay as written, with their
+    arguments translated. A string registry value is a plain rename.
+
+    ``lits`` (the masked-literal table) and ``now`` (the clock SQL)
+    reach the builders that declare them as keyword-only parameters.
+    A call with the wrong number of arguments raises ValueError naming
+    the function and its character offset (with literals restored)."""
+
+    def build(name, b, args, pos):
+        if isinstance(b, str):
+            return f"{b}({', '.join(args)})"
+        sig = inspect.signature(b)
+        kw = {k: v for k, v in (("lits", lits), ("now", now))
+              if k in sig.parameters}
+        try:
+            sig.bind(*args, **kw)
+        except TypeError as e:
+            off = len(_unmask(s[:pos], lits))
+            raise ValueError(
+                f"{name}() at offset {off}: wrong number of arguments"
+                f" ({len(args)}): {e}"
+            ) from None
+        return b(*args, **kw)
+
+    def scan(lo, hi):
+        out, i = [], lo
+        while m := _CALL_HEAD.search(s, i, hi):
+            if not m.group(1):  # raw literal: inert
+                out.append(s[i:m.end()])
+                i = m.end()
+                continue
+            close, spans = _call_args(s, m.end(), hi)
+            if close is None:
+                break
+            out.append(s[i:m.start()])
+            b = calls.get(m.group(1))
+            if b is None:
+                out += [s[m.start():m.end()], scan(m.end(), close), ")"]
+            else:
+                args = [scan(a, z).strip() for a, z in spans]
+                out.append(build(m.group(1), b, args, m.start()))
+            i = close + 1
+        out.append(s[i:hi])
+        return "".join(out)
+
+    return scan(0, len(s))
+
+
+def _rewrite_dynamic_forms(s: str) -> str:
+    """Post-masking pre-passes for the dynamic forms: ``todynamic(col)
+    .a.b`` / ``parse_json(col).a.b`` dotted access → get_json_object
+    (string-typed values, the cross-engine-checkable form; DuckDB
+    twin: json_extract_string); ``dynamic([...])`` array literal →
+    ``array(...)``; ``dynamic({...})`` property bag → the engine's
+    JSON-string bag form (same representation pack()/bag_unpack use;
+    scalars inside arrive masked, one level of braces)."""
+    s = re.sub(
+        r"\b(?:todynamic|parse_json)\((\w+)\)\.(\w+(?:\.\w+)*)",
+        lambda m: f"get_json_object({m.group(1)}, '$.{m.group(2)}')",
+        s,
+    )
+    s = re.sub(r"\bdynamic\(\s*\[([^\]]*)\]\s*\)", r"array(\1)", s)
+    return re.sub(r"\bdynamic\(\s*(\{.*?\})\s*\)", r"'\1'", s)
 
 
 def _expr(kql: str, now: str | None = None) -> str:
     """KQL scalar/boolean expression → Spark SQL text.
 
-    Two-phase rewrite: the operators that INTERPRET quoted terms
-    (``has``/``has_any``/``contains``/``startswith``/``endswith``/
-    ``extract``) run first on the raw text; every remaining string
-    literal is then MASKED behind a placeholder so the literal-agnostic
-    rewrites (``==`` → ``=``, scalar-function renames, ``datetime(...)``
-    → timestamp, casts, case()) can never corrupt literal CONTENTS —
-    ``contains '=='`` must keep its ``==``, and a term that happens to
-    contain ``strcat(`` or ``datetime(`` must stay verbatim. Literals
-    are restored at the end (including the ones the phase-1 rewrites
-    produced, which the mask equally protects)."""
+    1. The infix operators that INTERPRET quoted terms (``has``/
+       ``has_any``/``has_all``/``matches regex``/``contains``/
+       ``startswith``/``endswith`` and their variants) rewrite the raw
+       text.
+    2. Every remaining string literal is MASKED behind a ``\\0L<i>\\0``
+       placeholder, so no later step can corrupt literal CONTENTS —
+       ``contains '=='`` keeps its ``==``, and a term that happens to
+       contain ``strcat(`` stays verbatim.
+    3. Pre-passes for the postfix and literal forms (``x[i]``,
+       ``todynamic(x).a.b``, ``dynamic(...)``) and the membership /
+       range infix operators (``between``, ``!in``, ``in~``).
+    4. ONE inside-out pass over the function calls (_scan_calls with
+       the ``_CALLS`` registry, ``name → builder``): each call's
+       arguments are translated first, then its builder's SQL is
+       spliced and never re-read. Builders that interpret a quoted
+       argument (``extract``, ``split``, ``trim``, ``countof``,
+       ``datetime_add``, ``format_timespan``, ``convert_*``, ...)
+       read it from the mask table.
+    5. ``==`` → ``=`` and the literals are restored."""
     s = kql
-    now_sql = f"timestamp'{now}'" if now else "current_timestamp()"
-    s = re.sub(
-        r"\bago\((\d+)([dhms])\)",
-        lambda m: f"({now_sql} - make_interval(0,0,0,0,0,0,{_timespan_s(m.group(1), m.group(2))}))",
-        s,
-    )
-    # KQL bin(ts, 1h): floor to an epoch-aligned multiple of the bin size
-    s = re.sub(
-        r"\bbin\(([^,]+),\s*(\d+)([dhms])\)",
-        lambda m: (
-            f"timestamp_seconds(floor(unix_timestamp({m.group(1).strip()})"
-            f" / {_timespan_s(m.group(2), m.group(3))})"
-            f" * {_timespan_s(m.group(2), m.group(3))})"
-        ),
-        s,
-    )
-    # ---- phase 1: rewrites that interpret quoted TERM contents -------
+    # ---- phase 1: infix operators that interpret quoted TERM contents
     # `has`: case-insensitive whole-term match (KQL's indexed term
     # search). Two-layer escaping: re.escape guards regex metachars,
     # then every backslash is DOUBLED to survive the SQL string-literal
@@ -316,7 +1834,7 @@ def _expr(kql: str, now: str | None = None) -> str:
     # Negated (!has) and case-sensitive (has_cs) forms run FIRST so the
     # bare-`has` pattern never fires inside them.
     def _term_match(m, neg=False, ci=True):
-        esc = re.escape(m.group(2)).replace(chr(92), chr(92) * 2)
+        esc = _sql_re(re.escape(m.group(2)))
         flags = "(?i)" if ci else ""
         e = f"{m.group(1)} RLIKE '{flags}\\\\b{esc}\\\\b'"
         # Negations are null-safe: Kusto treats a null column as "does
@@ -335,9 +1853,7 @@ def _expr(kql: str, now: str | None = None) -> str:
     # verbatim (backslashes doubled only for the SQL literal layer)
     s = re.sub(
         r"(\w+)\s+matches\s+regex\s+'([^']*)'",
-        lambda m: "{} RLIKE '{}'".format(
-            m.group(1), m.group(2).replace(chr(92), chr(92) * 2)
-        ),
+        lambda m: "{} RLIKE '{}'".format(m.group(1), _sql_re(m.group(2))),
         s,
     )
     # has_any (t1, t2, ...): whole-term match on ANY of the terms.
@@ -355,7 +1871,7 @@ def _expr(kql: str, now: str | None = None) -> str:
                 " match the identifier text itself, not its values)"
             )
         def term_re(t):
-            return re.escape(t[1:-1]).replace(chr(92), chr(92) * 2)
+            return _sql_re(re.escape(t[1:-1]))
         if mode == "any":
             alt = "|".join(term_re(t) for t in terms)
             return f"{col} RLIKE '(?i)\\\\b({alt})\\\\b'"
@@ -370,63 +1886,6 @@ def _expr(kql: str, now: str | None = None) -> str:
         s,
     )
     s = re.sub(r"(\w+)\s+has_any\s*\(([^()]*)\)", _has_multi, s)
-    s = re.sub(
-        r"\bextract\(\s*'([^']*)'\s*,\s*(\d+)\s*,\s*(\w+)\s*\)",
-        r"regexp_extract(\3, '\1', \2)",
-        s,
-    )
-    # extract_all('(re)', col): all capture-group matches as an array.
-    # The regex passes verbatim (backslashes doubled for the SQL
-    # literal layer, like `matches regex`); Kusto's common one-group
-    # form maps to group 1.
-    s = re.sub(
-        r"\bextract_all\(\s*'([^']*)'\s*,\s*(\w+)\s*\)",
-        lambda m: "regexp_extract_all({}, '{}', 1)".format(
-            m.group(2), m.group(1).replace(chr(92), chr(92) * 2)
-        ),
-        s,
-    )
-    # split(col, 'delim'): the KQL delimiter is a PLAIN string; Spark's
-    # split takes a regex — escape it (two-layer, as for `has`). KQL
-    # dynamic indexing split(...)[0] is 0-based and so is Spark SQL's
-    # array [] operator, so indexing passes through unchanged.
-    s = re.sub(
-        r"\bsplit\((\w+)\s*,\s*'([^']*)'\)",
-        lambda m: "split({}, '{}', -1)".format(
-            m.group(1),
-            re.escape(m.group(2)).replace(chr(92), chr(92) * 2),
-        ),
-        s,
-    )
-    # trim / trim_start / trim_end: Kusto trims a REGEX match from the
-    # ends (not a character set) — regexp_replace anchored at the ends;
-    # the regex passes verbatim (SQL-literal backslash doubling only)
-    def _trim(m, head=True, tail=True):
-        pat = m.group(1).replace(chr(92), chr(92) * 2)
-        parts = []
-        if head:
-            parts.append(f"^(?:{pat})+")
-        if tail:
-            parts.append(f"(?:{pat})+$")
-        return f"regexp_replace({m.group(2)}, '{'|'.join(parts)}', '')"
-
-    s = re.sub(
-        r"\btrim_start\(\s*'([^']*)'\s*,\s*(\w+)\s*\)",
-        lambda m: _trim(m, tail=False),
-        s,
-    )
-    s = re.sub(
-        r"\btrim_end\(\s*'([^']*)'\s*,\s*(\w+)\s*\)",
-        lambda m: _trim(m, head=False),
-        s,
-    )
-    s = re.sub(r"\btrim\(\s*'([^']*)'\s*,\s*(\w+)\s*\)", _trim, s)
-    # countof moved to phase 2 (post-masking): _rewrite_call's
-    # balanced-paren scan is not quote-aware, so a quoted term
-    # containing '(' / ')' (e.g. countof(tostring(x), ':)')) would
-    # mis-split args if run here — masked literals are inert (r13
-    # ADVICE fix; the phase-2 path also unifies the literal / dynamic
-    # escape discipline).
     # contains/startswith/endswith: LIKE wildcards in the TERM must be
     # literal — escape %/_/backslash and pin ESCAPE. Layering: in the
     # final LIKE pattern (post SQL-literal unescape) the term needs
@@ -479,21 +1938,6 @@ def _expr(kql: str, now: str | None = None) -> str:
             lambda m, p=pre, q=post: _like(m, p, q),
             s,
         )
-    # datetime_add('period', n, ts) -> timestampadd(PERIOD, n, ts):
-    # interprets its quoted period literal, so it must run before
-    # masking (like has/contains). Spark's timestampadd takes the unit
-    # as an IDENTIFIER keyword; unknown periods fail loudly here
-    # rather than as an opaque Catalyst parse error.
-    def _dt_add(m):
-        unit = m.group(1).lower()
-        if unit not in (
-            "year", "quarter", "month", "week", "day",
-            "hour", "minute", "second",
-        ):
-            raise ValueError(f"datetime_add: unsupported period {unit!r}")
-        return f"timestampadd({unit.upper()},"
-
-    s = re.sub(r"\bdatetime_add\(\s*'(\w+)'\s*,", _dt_add, s)
     # ---- mask every remaining literal -------------------------------
     lits: list[str] = []
 
@@ -511,1288 +1955,10 @@ def _expr(kql: str, now: str | None = None) -> str:
     # splices verbatim. One alternation so a quote of one kind inside
     # a literal of the other kind stays inert.
     s = re.sub("'[^']*'|\"[^\"]*\"", _mask, s)
-    # ---- phase 2: literal-agnostic rewrites (placeholders inert) ----
-    # dynamic indexing first: out-of-range/missing-key must be NULL
-    # (Kusto) while Spark's [] throws under ANSI
-    s = _rewrite_index_postfix(s)
-
-    # countof via the length-difference identity (pure string ops, no
-    # regex). ONE post-masking path for both literal and dynamic terms
-    # so they share the escape discipline: a masked-literal term is
-    # unmasked, backslash-doubled for the SQL string-literal layer
-    # (same as the has/split/trim rewrites — '\n' must reach
-    # replace()/length() verbatim), and rejected loudly if empty (a
-    # constant empty term is a query bug). A column/expression term is
-    # spliced as-is with nullif so an empty/null VALUE yields null (a
-    # data condition, not a query bug).
-    def _countof_dyn(a, b):
-        mm = re.fullmatch(rf"{chr(0)}L(\d+){chr(0)}", b.strip())
-        if mm:
-            raw = lits[int(mm.group(1))][1:-1]
-            if not raw:
-                raise ValueError("countof needs a non-empty search term")
-            t = "'" + raw.replace(chr(92), chr(92) * 2) + "'"
-            return (
-                f"CAST((length({a}) - length(replace({a}, {t}, ''))) "
-                f"/ length({t}) AS BIGINT)"
-            )
-        return (
-            f"CAST((length({a}) - length(replace({a}, {b}, ''))) "
-            f"/ nullif(length({b}), 0) AS BIGINT)"
-        )
-
-    s = _rewrite_call(s, "countof", _countof_dyn)
-    s = re.sub(r"\biff\(", "if(", s)
-    s = re.sub(r"\bstrcat\(", "concat(", s)
-    s = re.sub(r"\btolower\(", "lower(", s)
-    s = re.sub(r"\btoupper\(", "upper(", s)
-    s = re.sub(r"\bstrlen\(", "length(", s)
-    # HLL sketch scalars (pair with summarize hll()/hll_merge()):
-    # dcount_hll(sketch) -> estimate; 2-arg hll_merge(a, b) -> union
-    s = re.sub(r"\bdcount_hll\(", "hll_sketch_estimate(", s)
-    s = re.sub(r"\bhll_merge\(", "hll_union(", s)
-    # IPv4 family (round 10): pure bigint arithmetic over the dotted
-    # quad — zero UDFs. parse_ipv4 honors an optional '/suffix' (bits
-    # beyond the prefix zeroed, Kusto semantics); is_match/compare use
-    # the MINIMAL of the operands' prefixes (+ the optional extra
-    # prefix arg), which is the numeric least() of the masks (a
-    # shorter prefix is a numerically smaller mask). format_ipv4 takes
-    # the STRING form (documented dialect: Kusto also accepts longs).
-    def _ip_num(a):
-        return (
-            "aggregate(transform(split(element_at(split(" + a + ", '/'),"
-            " 1), '\\\\.'), __s -> cast(__s as bigint)),"
-            " cast(0 as bigint), (__ac, __v) -> __ac * 256 + __v)"
-        )
-
-    def _ip_mask(a):
-        return (
-            "(case when size(split(" + a + ", '/')) > 1 then"
-            " shiftleft(cast(-1 as bigint), 32 - cast(element_at(split("
-            + a + ", '/'), 2) as int)) & cast(4294967295 as bigint)"
-            " else cast(4294967295 as bigint) end)"
-        )
-
-    def _pfx_mask(p):
-        return (
-            "(shiftleft(cast(-1 as bigint), 32 - cast(" + p + " as int))"
-            " & cast(4294967295 as bigint))"
-        )
-
-    s = _rewrite_call(
-        s, "ipv4_is_in_range",
-        lambda ip, rng: (
-            f"(({_ip_num(ip)} & {_ip_mask(rng)}) ="
-            f" ({_ip_num(rng)} & {_ip_mask(rng)}))"
-        ),
-    )
-    s = _rewrite_call(
-        s, "ipv4_is_match",
-        lambda a, b, p=None: (
-            lambda m: f"(({_ip_num(a)} & {m}) = ({_ip_num(b)} & {m}))"
-        )(
-            f"least({_ip_mask(a)}, {_ip_mask(b)})"
-            if p is None
-            else f"least({_ip_mask(a)}, {_ip_mask(b)}, {_pfx_mask(p)})"
-        ),
-    )
-    s = _rewrite_call(
-        s, "ipv4_compare",
-        lambda a, b, p=None: (
-            lambda m: (
-                f"cast(sign(({_ip_num(a)} & {m}) - ({_ip_num(b)} & {m}))"
-                " as int)"
-            )
-        )(
-            # optional third arg = prefix, exactly like ipv4_is_match
-            f"least({_ip_mask(a)}, {_ip_mask(b)})"
-            if p is None
-            else f"least({_ip_mask(a)}, {_ip_mask(b)}, {_pfx_mask(p)})"
-        ),
-    )
-    s = _rewrite_call(
-        s, "ipv4_netmask_suffix",
-        lambda a: (
-            "(case when size(split(" + a + ", '/')) > 1 then"
-            " cast(element_at(split(" + a + ", '/'), 2) as int)"
-            " else 32 end)"
-        ),
-    )
-    s = _rewrite_call(
-        s, "format_ipv4",
-        lambda a, p=None: (
-            lambda num: (
-                "concat_ws('.', cast(shiftright(" + num + ", 24) & 255"
-                " as string), cast(shiftright(" + num + ", 16) & 255"
-                " as string), cast(shiftright(" + num + ", 8) & 255"
-                " as string), cast(" + num + " & 255 as string))"
-            )
-        )(
-            f"({_ip_num(a)} & {_ip_mask(a)})"
-            if p is None
-            else f"({_ip_num(a)} & {_pfx_mask(p)})"
-        ),
-    )
-    s = _rewrite_call(
-        s, "parse_ipv4", lambda a: f"({_ip_num(a)} & {_ip_mask(a)})"
-    )
-
-    # ipv4_is_private: RFC 1918 blocks (10/8, 172.16/12, 192.168/16),
-    # pure bigint arithmetic. Kusto semantics: with a '/suffix' the
-    # WHOLE range must be private — check the network AND broadcast
-    # addresses of the masked range.
-    def _ipv4_priv(a):
-        n = f"({_ip_num(a)} & {_ip_mask(a)})"
-        b = (
-            f"({n} | (cast(4294967295 as bigint) & ~{_ip_mask(a)}))"
-        )
-
-        def _inblk(x, base, bits):
-            m = (0xFFFFFFFF << (32 - bits)) & 0xFFFFFFFF
-            return f"(({x} & cast({m} as bigint)) = cast({base} as bigint))"
-
-        def _priv(x):
-            return (
-                "(" + _inblk(x, 10 << 24, 8) + " or "
-                + _inblk(x, (172 << 24) | (16 << 16), 12) + " or "
-                + _inblk(x, (192 << 24) | (168 << 16), 16) + ")"
-            )
-
-        return f"({_priv(n)} and {_priv(b)})"
-
-    s = _rewrite_call(s, "ipv4_is_private", _ipv4_priv)
-
-    def _ipv4_in_rng(ip, rng):
-        return (
-            f"(({_ip_num(ip)} & {_ip_mask(rng)}) ="
-            f" ({_ip_num(rng)} & {_ip_mask(rng)}))"
-        )
-
-    s = _rewrite_call(
-        s, "ipv4_is_in_any_range",
-        lambda ip, *rngs: (
-            "(" + " or ".join(_ipv4_in_rng(ip, r) for r in rngs) + ")"
-        ),
-    )
-
-    # IPv6 family (round 13): pure array/string SQL over the 8 16-bit
-    # groups — zero UDFs, every parse bound ONCE via _bind1. Accepts
-    # compressed ('::') IPv6, an embedded trailing IPv4 (x::a.b.c.d),
-    # pure IPv4 (auto-mapped to ::ffff:a.b.c.d; a '/p' suffix maps to
-    # /(96+p) in v6 space, Kusto semantics), and an optional '/NN'
-    # prefix. Structurally invalid input (wrong group count, bad group
-    # text, prefix out of [0,128]) -> null. compare/is_match use the
-    # MINIMAL of the operands' prefixes (+ the optional extra prefix
-    # arg), like the ipv4 family above; masked addresses compare as
-    # fixed-width lowercase-hex strings (order-equivalent to the
-    # 128-bit integer compare). Parity pinned by the round-13
-    # ipaddress-module differential fuzzer (tests/test_kql_ipv6.py).
-    def _v6_struct(a):
-        # -> named_struct('g', array<bigint> of 8 | null, 'p', int)
-        # __u: address part + optional numeric suffix
-        # __q: trailing dotted quad ('' when absent)
-        # __w: pure-hex form + effective prefix
-        # __h: 8 hex group strings   __g9: their numeric values
-        groups = (
-            "transform(__h6, __gx -> if(__gx rlike"
-            " '^[0-9a-fA-F]{1,4}$',"
-            " cast(conv(__gx, 16, 10) as bigint),"
-            " cast(null as bigint)))"
-        )
-        valid = (
-            "(__w6.a6 is not null and size(__g9) = 8 and not"
-            " exists(__g9, __gx -> __gx is null)"
-            " and __w6.p between 0 and 128)"
-        )
-        out = _bind1(
-            groups, "__g9",
-            f"named_struct('g', if({valid}, __g9,"
-            " cast(null as array<bigint>)), 'p', __w6.p)",
-        )
-        harr = (
-            "if(instr(__w6.a6, '::') = 0, split(__w6.a6, ':', -1),"
-            " concat("
-            " if(element_at(split(__w6.a6, '::', -1), 1) = '', array(),"
-            " split(element_at(split(__w6.a6, '::', -1), 1), ':', -1)),"
-            " array_repeat('0', 8"
-            " - size(if(element_at(split(__w6.a6, '::', -1), 1) = '',"
-            " array(), split(element_at(split(__w6.a6, '::', -1), 1),"
-            " ':', -1)))"
-            " - size(if(size(split(__w6.a6, '::', -1)) < 2 or"
-            " element_at(split(__w6.a6, '::', -1), 2) = '', array(),"
-            " split(element_at(split(__w6.a6, '::', -1), 2), ':', -1)))),"
-            " if(size(split(__w6.a6, '::', -1)) < 2 or"
-            " element_at(split(__w6.a6, '::', -1), 2) = '', array(),"
-            " split(element_at(split(__w6.a6, '::', -1), 2), ':', -1))))"
-        )
-        out = _bind1(harr, "__h6", out)
-        # embedded-v4 -> two hex groups; '' quad passes through
-        v4ok = (
-            "(size(__o4) = 4 and not exists(__o4, __ox ->"
-            " __ox is null or __ox < 0 or __ox > 255))"
-        )
-        g7 = "element_at(__o4, 1) * 256 + element_at(__o4, 2)"
-        g8 = "element_at(__o4, 3) * 256 + element_at(__o4, 4)"
-        v4hex = f"concat(lower(hex({g7})), ':', lower(hex({g8})))"
-        addr6 = _bind1(
-            "transform(split(__q4, '\\\\.', -1),"
-            " __ox -> try_cast(__ox as bigint))", "__o4",
-            "case when instr(__u6.ad, '.') = 0 then __u6.ad"
-            f" when not {v4ok} then cast(null as string)"
-            " when instr(__u6.ad, ':') = 0 then"
-            f" concat('::ffff:', {v4hex})"
-            " else concat(substr(__u6.ad, 1,"
-            f" length(__u6.ad) - length(__q4)), {v4hex}) end",
-        )
-        w = _bind1(
-            "regexp_extract(__u6.ad,"
-            " '([0-9]+\\\\.[0-9]+\\\\.[0-9]+\\\\.[0-9]+)$', 1)", "__q4",
-            f"named_struct('a6', {addr6}, 'p',"
-            " case when __u6.sx is null then 128"
-            " when instr(__u6.ad, ':') = 0 then 96 + __u6.sx"
-            " else __u6.sx end)",
-        )
-        out = _bind1(w, "__w6", out)
-        u = (
-            f"named_struct('ad', element_at(split(cast({a} as string),"
-            " '/', -1), 1), 'sx',"
-            f" if(size(split(cast({a} as string), '/', -1)) > 1,"
-            f" try_cast(element_at(split(cast({a} as string), '/', -1),"
-            " 2) as int), cast(null as int)))"
-        )
-        return _bind1(u, "__u6", out)
-
-    def _v6_key(st, P):
-        # fixed-width hex of the 8 groups masked to prefix P
-        bits = f"greatest(least(({P}) - (__i6 - 1) * 16, 16), 0)"
-        masked = (
-            f"shiftleft(shiftright(element_at({st}.g, __i6),"
-            f" 16 - {bits}), 16 - {bits})"
-        )
-        return (
-            f"if({st}.g is null, cast(null as string),"
-            " array_join(transform(sequence(1, 8), __i6 ->"
-            f" lpad(lower(hex({masked})), 4, '0')), ':'))"
-        )
-
-    def _parse_ipv6(a, p=None):
-        P = "__t6.p" if p is None else f"least(__t6.p, cast({p} as int))"
-        return _bind1(_v6_struct(a), "__t6", _v6_key("__t6", P))
-
-    s = _rewrite_call(s, "parse_ipv6_mask", lambda a, p: _parse_ipv6(a, p))
-    s = _rewrite_call(s, "parse_ipv6", _parse_ipv6)
-
-    def _v6_pair(a, b, p, body):
-        extra = "" if p is None else f", cast({p} as int)"
-        P = f"least(__ta.p, __tb.p{extra})"
-        ka, kb = _v6_key("__ta", P), _v6_key("__tb", P)
-        inner = f"named_struct('ka', {ka}, 'kb', {kb})"
-        return _bind1(
-            _v6_struct(a), "__ta",
-            _bind1(_v6_struct(b), "__tb", _bind1(inner, "__kk", body)),
-        )
-
-    s = _rewrite_call(
-        s, "ipv6_compare",
-        lambda a, b, p=None: _v6_pair(
-            a, b, p,
-            "case when __kk.ka is null or __kk.kb is null then"
-            " cast(null as int) when __kk.ka < __kk.kb then -1"
-            " when __kk.ka > __kk.kb then 1 else 0 end",
-        ),
-    )
-    s = _rewrite_call(
-        s, "ipv6_is_match",
-        lambda a, b, p=None: _v6_pair(
-            a, b, p,
-            "case when __kk.ka is null or __kk.kb is null then"
-            " cast(null as boolean) else __kk.ka = __kk.kb end",
-        ),
-    )
-
-    def _ipv6_in_rng(ip, rng):
-        # containment at the RANGE's own prefix
-        return _bind1(
-            _v6_struct(ip), "__ta",
-            _bind1(
-                _v6_struct(rng), "__tb",
-                "case when __ta.g is null or __tb.g is null then"
-                " cast(null as boolean) else "
-                + _v6_key("__ta", "__tb.p") + " = "
-                + _v6_key("__tb", "__tb.p") + " end",
-            ),
-        )
-
-    s = _rewrite_call(s, "ipv6_is_in_range", _ipv6_in_rng)
-    s = _rewrite_call(
-        s, "ipv6_is_in_any_range",
-        lambda ip, *rngs: (
-            "(" + " or ".join(_ipv6_in_rng(ip, r) for r in rngs) + ")"
-        ),
-    )
-    # geo_distance_2points(lon1, lat1, lon2, lat2) -> meters. Spherical
-    # haversine on the IUGG mean radius (Kusto computes WGS84 geodesic
-    # — sub-0.5% deviation, documented; cross-engine exact because both
-    # sides run the same formula)
-    s = _rewrite_call(
-        s, "geo_distance_2points",
-        lambda lo1, la1, lo2, la2: (
-            "(2 * 6371008.8 * asin(sqrt("
-            f"pow(sin((radians({la2}) - radians({la1})) / 2), 2)"
-            f" + cos(radians({la1})) * cos(radians({la2}))"
-            f" * pow(sin((radians({lo2}) - radians({lo1})) / 2), 2))))"
-        ),
-    )
-    # round-13 geo family (operators/spatial.py builders): closed-form
-    # geohash encode/decode (fixed-point quantize + compile-time bit
-    # interleave — zero UDFs, equi-joinable cell ids) and the
-    # point-in-circle predicate on the shared haversine
-    from azuredataengineering_deeplearning_spark.operators.spatial import (
-        geohash_center_sql,
-        geohash_neighbors_sql,
-        geohash_sql,
-        haversine_sql,
-    )
-
-    s = _rewrite_call(
-        s, "geo_point_to_geohash",
-        lambda lon, lat, p="5": geohash_sql(lon, lat, p),
-    )
-    s = _rewrite_call(
-        s, "geo_geohash_neighbors", geohash_neighbors_sql
-    )
-    s = _rewrite_call(
-        s, "geo_geohash_to_central_point",
-        lambda gh: geohash_center_sql(gh),
-    )
-    s = _rewrite_call(
-        s, "geo_point_in_circle",
-        lambda plon, plat, clon, clat, r: (
-            f"({haversine_sql(plon, plat, clon, clat)}"
-            f" <= CAST(({r}) AS DOUBLE))"
-        ),
-    )
-    # parse_url(x) -> Kusto's URL bag as a JSON string (keys Scheme /
-    # Host / Port / Path / Username / Password / Query Parameters /
-    # Fragment, exactly Kusto's, absent parts ''). Built on Spark's
-    # 2-arg parse_url part extractor (which keeps its own name: a
-    # 2-arg call passes through untouched); dotted access rides the
-    # existing todynamic() rewrite; the nested Query Parameters bag
-    # needs a bracket JSON path (space in the Kusto key name).
-    def _qparam_bag(x):
-        # fold the raw pairs left-to-right, dropping any earlier entry
-        # with the same key before inserting — keep-last semantics with
-        # no duplicate-key map exception possible by construction
-        q = f"try_parse_url({x}, 'QUERY')"
-        # NOTE: 'substr', not 'substring' — this generated SQL text
-        # flows back through the KQL scalar rewrites, and 'substring'
-        # would be re-shifted by the KQL 0-based -> Spark 1-based rule
-        raw_v = (
-            "if(instr(__p, '=') = 0, '',"
-            " substr(__p, instr(__p, '=') + 1))"
-        )
-        val = f"coalesce(try_url_decode({raw_v}), {raw_v})"
-        return (
-            f"if(coalesce({q}, '') = '', map(), "
-            f"aggregate(split({q}, '&'),"
-            " cast(map() as map<string,string>),"
-            " (__acc, __p) -> map_concat("
-            "map_filter(__acc, (__k, __v) ->"
-            " __k != split_part(__p, '=', 1)),"
-            f" map(split_part(__p, '=', 1), {val}))))"
-        )
-
-    def _parse_url_bag(*args):
-        if len(args) != 1:
-            return f"parse_url({', '.join(args)})"
-        x = args[0]
-        ui = f"try_parse_url({x}, 'USERINFO')"
-        return (
-            "to_json(named_struct("
-            f"'Scheme', coalesce(try_parse_url({x}, 'PROTOCOL'), ''), "
-            f"'Host', coalesce(try_parse_url({x}, 'HOST'), ''), "
-            f"'Port', coalesce(regexp_extract(try_parse_url({x}, "
-            "'AUTHORITY'), ':([0-9]+)$', 1), ''), "
-            f"'Path', coalesce(try_parse_url({x}, 'PATH'), ''), "
-            f"'Username', coalesce(split_part({ui}, ':', 1), ''), "
-            f"'Password', coalesce(split_part({ui}, ':', 2), ''), "
-            # absent/empty query string -> the empty bag Kusto emits.
-            # Built by an aggregate fold (NOT str_to_map): duplicate
-            # keys (?a=1&a=2) keep-last instead of throwing under
-            # Spark's default mapKeyDedupPolicy=EXCEPTION, and values
-            # are URL-decoded like Kusto's (try_url_decode with a
-            # raw-value fallback for malformed %-escapes).
-            f"'Query Parameters', {_qparam_bag(x)}, "
-            f"'Fragment', coalesce(try_parse_url({x}, 'REF'), '')))"
-        )
-
-    s = _rewrite_call(s, "parse_url", _parse_url_bag)
-    # round-10 scalar batch 5: bitwise / crypto-hash / array-set
-    # functions — all textual rewrites to JVM built-ins, zero UDFs.
-    s = _rewrite_call(s, "binary_and", lambda a, b: f"({a} & {b})")
-    s = _rewrite_call(s, "binary_or", lambda a, b: f"({a} | {b})")
-    s = _rewrite_call(s, "binary_xor", lambda a, b: f"({a} ^ {b})")
-    s = _rewrite_call(s, "binary_not", lambda a: f"(~({a}))")
-    s = _rewrite_call(
-        s, "binary_shift_left", lambda a, n: f"shiftleft({a}, {n})"
-    )
-    s = _rewrite_call(
-        s, "binary_shift_right", lambda a, n: f"shiftright({a}, {n})"
-    )
-    s = re.sub(r"\bbitset_count_ones\(", "bit_count(", s)
-    s = _rewrite_call(s, "exp2", lambda a: f"pow(cast(2 as double), {a})")
-    s = _rewrite_call(s, "hash_sha256", lambda a: f"sha2({a}, 256)")
-    s = _rewrite_call(s, "hash_sha1", lambda a: f"sha1({a})")
-    s = _rewrite_call(s, "hash_md5", lambda a: f"md5({a})")
-    s = re.sub(r"\bpack_array\(", "array(", s)
-    s = re.sub(r"\bstrcat_array\(", "array_join(", s)
-    s = _rewrite_call(s, "array_sort_asc", lambda a: f"sort_array({a})")
-    s = _rewrite_call(
-        s, "array_sort_desc", lambda a: f"sort_array({a}, false)"
-    )
-    s = re.sub(r"\barray_reverse\(", "reverse(", s)
-    # Kusto set_* return unordered sets; the engine pins SORTED output
-    # (documented deviation — deterministic and cross-engine checkable)
-    s = _rewrite_call(
-        s, "set_union", lambda a, b: f"sort_array(array_union({a}, {b}))"
-    )
-    s = _rewrite_call(
-        s, "set_intersect",
-        lambda a, b: f"sort_array(array_intersect({a}, {b}))",
-    )
-    s = _rewrite_call(
-        s, "set_difference",
-        lambda a, b: f"sort_array(array_except({a}, {b}))",
-    )
-    s = _rewrite_call(
-        s, "set_has_element", lambda a, x: f"array_contains({a}, {x})"
-    )
-    # round-11 scalar batch 6: array shift/rotate/split/iff, the regex
-    # index/count/replace family, extract_json, element-wise series
-    # comparisons and folds. All textual rewrites to JVM built-ins /
-    # higher-order functions — zero UDFs. iif = iff alias.
-    s = re.sub(r"\biif\(", "if(", s)
-    s = _rewrite_call(
-        s, "endofyear",
-        lambda a: (
-            f"(date_trunc('YEAR', {a}) + interval 1 year"
-            " - interval 1 microsecond)"
-        ),
-    )
-
-    def _rot(a, n):
-        k = f"cast(pmod({n}, greatest(size({a}), 1)) as int)"
-        return (
-            f"(case when size({a}) <= 1 then {a} else"
-            f" concat(slice({a}, {k} + 1, size({a}) - {k}),"
-            f" slice({a}, 1, {k})) end)"
-        )
-
-    s = _rewrite_call(s, "array_rotate_left", _rot)
-    s = _rewrite_call(
-        s, "array_rotate_right", lambda a, n: _rot(a, f"-({n})")
-    )
-
-    def _shift(a, n, fill="null"):
-        # type-preserving pad: transform over a slice of the source so
-        # a null fill inherits the ELEMENT type (array_repeat(null, k)
-        # would mint array<void> and break the concat)
-        def pad(k):
-            return (
-                f"transform(slice({a}, 1, {k}),"
-                f" __x -> if(false, __x, {fill}))"
-            )
-
-        kl = f"least(greatest(cast({n} as int), 0), size({a}))"
-        kr = f"least(greatest(cast(-({n}) as int), 0), size({a}))"
-        return (
-            f"(case when cast({n} as int) >= 0 then"
-            f" concat(slice({a}, {kl} + 1, size({a}) - {kl}), {pad(kl)})"
-            f" else concat({pad(kr)}, slice({a}, 1, size({a}) - {kr}))"
-            " end)"
-        )
-
-    s = _rewrite_call(s, "array_shift_left", _shift)
-    s = _rewrite_call(
-        s, "array_shift_right",
-        lambda a, n, fill="null": _shift(a, f"-({n})", fill),
-    )
-    s = _rewrite_call(
-        s, "array_split",
-        lambda a, i: (
-            lambda k: (
-                f"array(slice({a}, 1, {k}),"
-                f" slice({a}, {k} + 1, size({a}) - {k}))"
-            )
-        )(f"least(greatest(cast({i} as int), 0), size({a}))"),
-    )
-    # array branches only (Kusto also allows scalar branches; a scalar
-    # cannot be distinguished textually — documented subset). Length
-    # mismatches yield null elements via try_element_at, like Kusto.
-    s = _rewrite_call(
-        s, "array_iff",
-        lambda c, t, f: (
-            f"transform({c}, (__c, __i) -> if(__c,"
-            f" try_element_at({t}, __i + 1),"
-            f" try_element_at({f}, __i + 1)))"
-        ),
-    )
-    s = _rewrite_call(
-        s, "indexof_regex",
-        lambda a, p: f"(regexp_instr({a}, {p}) - 1)",  # 0-based, -1 miss
-    )
-    s = _rewrite_call(
-        s, "countof_regex", lambda a, p: f"regexp_count({a}, {p})"
-    )
-    s = _rewrite_call(
-        s, "replace_regex",
-        lambda a, p, r: f"regexp_replace({a}, {p}, {r})",
-    )
-    s = _rewrite_call(
-        s, "replace_strings",
-        lambda a, f, r: (
-            f"(case when size({f}) = 0 then {a} else"
-            f" aggregate(sequence(1, size({f})), {a},"
-            f" (__acc, __i) -> replace(__acc,"
-            f" element_at({f}, __i), element_at({r}, __i))) end)"
-        ),
-    )
-
-    def _extract_json(path, src, ty=None):
-        base = f"get_json_object({src}, {path})"
-        if ty is None:
-            return base
-        tm = re.match(r"^typeof\s*\(\s*(\w+)\s*\)$", ty.strip())
-        if not tm or tm.group(1).lower() not in _KQL_TYPES:
-            raise ValueError(
-                f"extract_json: third arg must be typeof(<type>), got {ty!r}"
-            )
-        return f"try_cast({base} as {_KQL_TYPES[tm.group(1).lower()]})"
-
-    s = _rewrite_call(s, "extract_json", _extract_json)
-    s = _rewrite_call(
-        s, "series_sum",
-        lambda a: (
-            f"aggregate({a}, cast(0 as double),"
-            " (__a, __x) -> __a + coalesce(cast(__x as double),"
-            " cast(0 as double)))"
-        ),
-    )
-    s = _rewrite_call(
-        s, "series_product",
-        lambda a: (
-            f"aggregate({a}, cast(1 as double),"
-            " (__a, __x) -> __a * coalesce(cast(__x as double),"
-            " cast(1 as double)))"
-        ),
-    )
-    for _nm, _fn in (
-        ("series_floor", "floor"), ("series_ceiling", "ceil"),
-        ("series_round", "round"), ("series_sign", "sign"),
-    ):
-        s = _rewrite_call(
-            s, _nm,
-            lambda a, fn=_fn: (
-                f"transform({a}, __x -> cast({fn}(__x) as double))"
-            ),
-        )
-    for _nm, _op in (
-        ("series_equals", "="), ("series_not_equals", "!="),
-        ("series_greater", ">"), ("series_less", "<"),
-        ("series_greater_equals", ">="), ("series_less_equals", "<="),
-    ):
-        s = _rewrite_call(
-            s, _nm,
-            lambda a, b, op=_op: (
-                f"zip_with({a}, {b}, (__x, __y) -> __x {op} __y)"
-            ),
-        )
-
-    def _series_outliers(a, kind=None, *rest):
-        # Tukey-fence anomaly scores, pure array SQL. Dialect
-        # definition (documented; Kusto's exact interpolation is not
-        # published): quantiles are NEAREST-RANK over the sorted
-        # non-null elements — ctukey (default) fences at p10/p90,
-        # tukey at p25/p75; score = distance outside the fence in
-        # fence-IQR units (0 inside, null element -> null, constant
-        # series -> 0). |score| > 1.5 mild / > 3 strong, matching
-        # Kusto's reading of its own scores. Deterministic and
-        # cross-engine checkable (the oracle runs the same formula).
-        k = (kind or "'ctukey'").strip()
-        mm = re.match(rf"^{chr(0)}L(\d+){chr(0)}$", k)
-        if mm:  # quoted literal arrives masked — look it up
-            k = lits[int(mm.group(1))]
-        k = k.strip().strip("'").lower()
-        if k == "ctukey":
-            lo_p, hi_p = 0.10, 0.90
-        elif k == "tukey":
-            lo_p, hi_p = 0.25, 0.75
-        else:
-            raise ValueError(
-                f"series_outliers: kind must be ctukey|tukey, got {kind!r}"
-            )
-        # bind-once discipline (same trick as series_fill_linear):
-        # the input array, its sorted copy, and the fence struct each
-        # bind ONE time — a naive textual expansion re-SORTED the
-        # array per element (O(n^2 log n) per row; a 10k-element
-        # series never finished)
-        def _b1(arg, var, body):
-            return (
-                f"element_at(transform(array(({arg})),"
-                f" {var} -> {body}), 1)"
-            )
-
-        srt = (
-            "array_sort(filter(transform(__sa,"
-            " __x -> cast(__x as double)), __x -> __x is not null))"
-        )
-
-        def q(p):
-            return (
-                f"element_at(__ss, cast(round({p} *"
-                " (size(__ss) - 1)) as int) + 1)"
-            )
-
-        fences = (
-            f"named_struct('lo', {q(lo_p)}, 'hi', {q(hi_p)},"
-            " 'n', size(__ss))"
-        )
-        per = (
-            "transform(__sa, __x -> case"
-            " when __x is null then cast(null as double)"
-            " when __qf.n = 0 or __qf.hi = __qf.lo"
-            " then cast(0 as double)"
-            " when cast(__x as double) > __qf.hi then"
-            " (cast(__x as double) - __qf.hi) / (__qf.hi - __qf.lo)"
-            " when cast(__x as double) < __qf.lo then"
-            " (cast(__x as double) - __qf.lo) / (__qf.hi - __qf.lo)"
-            " else cast(0 as double) end)"
-        )
-        body = _b1(fences, "__qf", per)
-        body = _b1(srt, "__ss", body)
-        return _b1(a, "__sa", body)
-
-    s = _rewrite_call(s, "series_outliers", _series_outliers)
-
-    # round-13 scalar batch 7: property-bag surgery over the engine's
-    # JSON-string bag form (pack()/parse_url/bag_unpack share it), set
-    # similarity, hash combinators, string utilities, and the gamma
-    # family. All textual rewrites to JVM built-ins — zero UDFs.
-    def _jq(x):
-        # quoted+escaped JSON text of an SQL string expression: reuse
-        # to_json's escaper ({"v":<raw>} -> strip the 5-char head and
-        # the trailing brace)
-        return _bind1(
-            f"to_json(named_struct('v', {x}))", "__jq",
-            "substr(__jq, 6, length(__jq) - 6)",
-        )
-
-    def _bag_val(j, k, sfx=""):
-        # raw JSON text of top-level key `k` of bag `j`. Objects and
-        # arrays come back verbatim from get_json_object; scalars come
-        # back UNQUOTED, so re-classify. Documented subset: the bag
-        # form is untyped JSON text, so a STRING value that itself
-        # spells a number/bool/null/object re-embeds as that type
-        # (pinned by tests); keys containing a single quote are out of
-        # the subset (they would break the JSONPath bracket form).
-        v = f"__bv{sfx}"
-        return _bind1(
-            f"get_json_object({j}, concat('$[''', {k}, ''']'))", v,
-            f"case when {v} is null then 'null'"
-            f" when {v} in ('true', 'false') then {v}"
-            f" when {v} rlike"
-            " '^-?[0-9]+(\\\\.[0-9]+)?([eE][+-]?[0-9]+)?$'"
-            f" then {v}"
-            # object/array pass-through ONLY for text that actually
-            # parses — a STRING value that merely starts with '{'/'['
-            # (e.g. '{not a bag') must re-quote, or the rebuilt bag is
-            # invalid JSON (round-13 bag-fuzzer find)
-            f" when substr({v}, 1, 1) in ('<', '[')"
-            f" and try_parse_json({v}) is not null then {v}"
-            f" else {_jq(v)} end".replace("'<'", "'{'"),
-        )
-
-    def _bag_entry(j, k, sfx=""):
-        return f"concat({_jq(k)}, ':', {_bag_val(j, k, sfx)})"
-
-    s = _rewrite_call(s, "bag_keys", lambda b: f"json_object_keys({b})")
-
-    _bm_n = [0]  # fresh lambda-var suffixes for nested merges
-
-    def _bag_merge2(x, y):
-        _bm_n[0] += 1
-        i = _bm_n[0]
-        jx, jy, mx, my = f"__jx{i}", f"__jy{i}", f"__mx{i}", f"__my{i}"
-        ent = (
-            f"concat({_jq('__bk')}, ':', if(array_contains({mx},"
-            f" __bk), {_bag_val(jx, '__bk', f'x{i}')},"
-            f" {_bag_val(jy, '__bk', f'y{i}')}))"
-        )
-        keys = (
-            f"concat({mx}, filter({my}, __bk ->"
-            f" not array_contains({mx}, __bk)))"
-        )
-        body = (
-            f"case when {mx} is null or {my} is null then"
-            " cast(null as string) else"
-            " concat('<', array_join(transform("
-            + keys + ", __bk -> " + ent + "), ','), '>') end"
-        ).replace("'<'", "'{'").replace("'>'", "'}'")
-        body = _bind1(f"json_object_keys({jy})", my, body)
-        body = _bind1(f"json_object_keys({jx})", mx, body)
-        body = _bind1(f"({y})", jy, body)
-        return _bind1(f"({x})", jx, body)
-
-    def _bag_merge(*bags):
-        # Kusto bag_merge: shallow, LEFTMOST bag wins per top-level
-        # key; key order pinned to first-appearance (document order)
-        if len(bags) < 2:
-            raise ValueError("bag_merge needs at least 2 bags")
-        out = bags[0]
-        for b in bags[1:]:
-            out = _bag_merge2(out, b)
-        return out
-
-    s = _rewrite_call(s, "bag_merge", _bag_merge)
-
-    def _bag_remove_keys(b, arr):
-        # top-level keys only (Kusto's JSONPath nested-removal form is
-        # out of the dialect subset, documented)
-        keep = (
-            f"filter(__mk, __bk -> not array_contains(({arr}), __bk))"
-        )
-        body = (
-            f"case when __mk is null or ({arr}) is null then"
-            " cast(null as string) else"
-            " concat('<', array_join(transform("
-            + keep + ", __bk -> " + _bag_entry("__jb", "__bk")
-            + "), ','), '>') end"
-        ).replace("'<'", "'{'").replace("'>'", "'}'")
-        body = _bind1("json_object_keys(__jb)", "__mk", body)
-        return _bind1(f"({b})", "__jb", body)
-
-    s = _rewrite_call(s, "bag_remove_keys", _bag_remove_keys)
-
-    def _bag_set_key(b, k, v):
-        # typed embed of ANY SQL value via to_json round-trip (a null
-        # value serializes the key out -> '<>' sentinel -> JSON null).
-        # An existing key updates IN PLACE; a new key appends.
-        newv = _bind1(
-            f"to_json(named_struct('v', {v}))", "__nv",
-            "if(__nv = '<>', 'null',"
-            " substr(__nv, 6, length(__nv) - 6))",
-        ).replace("'<>'", "'{}'")
-        ent = (
-            f"concat({_jq('__bk')}, ':', if(__bk = __nk, {newv},"
-            f" {_bag_val('__jb', '__bk')}))"
-        )
-        keys = (
-            "if(array_contains(__mk, __nk), __mk,"
-            " concat(__mk, array(__nk)))"
-        )
-        body = (
-            "case when __mk is null then cast(null as string) else"
-            " concat('<', array_join(transform("
-            + keys + ", __bk -> " + ent + "), ','), '>') end"
-        ).replace("'<'", "'{'").replace("'>'", "'}'")
-        body = _bind1("json_object_keys(__jb)", "__mk", body)
-        body = _bind1(f"cast(({k}) as string)", "__nk", body)
-        return _bind1(f"({b})", "__jb", body)
-
-    s = _rewrite_call(s, "bag_set_key", _bag_set_key)
-
-    # jaccard_index over dynamic arrays (set semantics; the empty/empty
-    # pair is 1.0 by the standard convention). size() may report null
-    # or -1 for a null array depending on the legacy flag — both map
-    # to null out.
-    s = _rewrite_call(
-        s, "jaccard_index",
-        lambda a, b: _bind1(
-            f"named_struct('i', size(array_intersect({a}, {b})),"
-            f" 'u', size(array_union({a}, {b})))", "__ji",
-            "case when __ji.i is null or __ji.u is null"
-            " or __ji.i < 0 or __ji.u < 0 then cast(null as double)"
-            " when __ji.u = 0 then cast(1.0 as double)"
-            " else cast(__ji.i as double) / __ji.u end",
-        ),
-    )
-    # hash_combine/hash_many -> one xxhash64 over all the arguments
-    # (same documented deviation as hash(): deterministic within the
-    # engine, different values than the Kusto service)
-    s = re.sub(r"\bhash_combine\(", "xxhash64(", s)
-    s = re.sub(r"\bhash_many\(", "xxhash64(", s)
-    s = _rewrite_call(
-        s, "strcmp",
-        lambda a, b: _bind1(
-            f"named_struct('a', cast({a} as string),"
-            f" 'b', cast({b} as string))", "__sc",
-            "case when __sc.a is null or __sc.b is null then"
-            " cast(null as int) when __sc.a < __sc.b then -1"
-            " when __sc.a > __sc.b then 1 else 0 end",
-        ),
-    )
-    # strrep: multiplier < 1 -> '' (Kusto errors; pinned lenient —
-    # parse-time rejection is reserved for structural query bugs)
-    s = _rewrite_call(
-        s, "strrep",
-        lambda v, n, d=None: (
-            f"if(cast({n} as int) < 1, '', array_join(transform("
-            f"sequence(1, greatest(cast({n} as int), 1)),"
-            f" __i -> cast({v} as string)), {d if d is not None else chr(39) * 2}))"
-        ),
-    )
-    s = _rewrite_call(
-        s, "isascii",
-        lambda a: (
-            f"coalesce(cast({a} as string) rlike"
-            " '^[\\\\x00-\\\\x7f]*$', false)"
-        ),
-    )
-    # every Spark string IS valid UTF-8; null -> false like Kusto
-    s = _rewrite_call(
-        s, "isutf8", lambda a: f"(cast({a} as string) is not null)"
-    )
-
-    # gamma/loggamma: Lanczos approximation (g=7, the classic 9-term
-    # public-domain coefficient set), reflection for x < 0.5, ~1e-15
-    # relative error away from the poles. loggamma stays in log space
-    # so large arguments do not overflow. Differentially checked
-    # against DuckDB's native gamma/lgamma by the round-13 fuzzer
-    # (tests/test_kql_gamma_fuzz.py).
-    _LANCZOS = [
-        "0.99999999999980993", "676.5203681218851",
-        "-1259.1392167224028", "771.32342877765313",
-        "-176.61502916214059", "12.507343278686905",
-        "-0.13857109526572012", "9.9843695780195716e-6",
-        "1.5056327351493116e-7",
-    ]
-
-    def _lz_a(z):
-        terms = " + ".join(
-            f"{c} / ({z} + {i - 1})"
-            for i, c in enumerate(_LANCZOS) if i > 0
-        )
-        return f"({_LANCZOS[0]} + {terms})"
-
-    def _gamma_pos(z):  # z >= 0.5; sqrt(2*pi) = 2.5066282746310002
-        # direct product below the double-overflow knee (most
-        # accurate); exp(loggamma) above it so gamma(1000) is a clean
-        # +Infinity instead of the inf * 0 = NaN the product form
-        # produces when pow overflows while exp underflows
-        prod = (
-            f"(2.5066282746310002 * pow({z} + 6.5, {z} - 0.5)"
-            f" * exp(-({z} + 6.5)) * {_lz_a(z)})"
-        )
-        return (
-            f"(case when {z} > 170.0 then exp({_loggamma_pos(z)})"
-            f" else {prod} end)"
-        )
-
-    def _loggamma_pos(z):  # ln(sqrt(2*pi)) = 0.9189385332046727
-        return (
-            f"(0.9189385332046727 + ({z} - 0.5) * ln({z} + 6.5)"
-            f" - ({z} + 6.5) + ln({_lz_a(z)}))"
-        )
-
-    s = _rewrite_call(
-        s, "loggamma",
-        lambda a: _bind1(
-            f"cast({a} as double)", "__gz",
-            "case when __gz >= 0.5 then " + _loggamma_pos("__gz")
-            # reflection: ln|Gamma(x)| = ln(pi) - ln|sin(pi x)|
-            #             - ln(Gamma(1-x));  ln(pi) = 1.1447298858494
-            + " else 1.1447298858494002 - ln(abs(sin(pi() * __gz))) - "
-            + _bind1("1e0 - __gz", "__gr", _loggamma_pos("__gr"))
-            + " end",
-        ),
-    )
-    s = _rewrite_call(
-        s, "gamma",
-        lambda a: _bind1(
-            f"cast({a} as double)", "__gz",
-            "case when __gz >= 0.5 then " + _gamma_pos("__gz")
-            + " else pi() / (sin(pi() * __gz) * "
-            + _bind1("1e0 - __gz", "__gr", _gamma_pos("__gr"))
-            + ") end",
-        ),
-    )
-    # round-13 scalar batch 8: path/CSV/duration parsing, byte
-    # formatting, base64-to-bytes, guid/rand. All textual rewrites to
-    # JVM built-ins — zero UDFs. (After batch 7 so _jq is in scope.)
-    def _parse_path(p):
-        # Kusto parse_path -> the 7-key bag (JSON-string form).
-        # Subset (documented): posix + windows paths with an optional
-        # scheme://; RootPath = a windows drive letter; ADS = the
-        # trailing :stream on the filename. Keys always present.
-        scheme = (
-            "regexp_extract(__pp, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)"
-        )
-        body = (
-            f"if({scheme} = '', __pp,"
-            f" substr(__pp, length({scheme}) + 4))"
-        )
-        # last separator position ('/' or '\') via the reverse trick
-        def _last_sep(v):
-            return (
-                "greatest("
-                f" if(instr(reverse({v}), '/') > 0,"
-                f"    length({v}) - instr(reverse({v}), '/') + 1, 0),"
-                f" if(instr(reverse({v}), '\\\\') > 0,"
-                f"    length({v}) - instr(reverse({v}), '\\\\') + 1,"
-                " 0))"
-            )
-
-        fname = "substr(__pb, __ls + 1)"
-        # root-anchored paths keep the root separator ('/f' -> '/',
-        # 'C:\\f' -> 'C:\\') like posixpath/ntpath dirname — the
-        # round-13 stdlib fuzzer's find
-        dpath = (
-            "case when __ls = 0 then ''"
-            " when __ls = 1 then substr(__pb, 1, 1)"
-            " when regexp_extract(substr(__pb, 1, __ls - 1),"
-            " '^[A-Za-z]:$', 0) != '' then substr(__pb, 1, __ls)"
-            " else substr(__pb, 1, __ls - 1) end"
-        )
-        dname = "substr(__dp, " + _last_sep("__dp") + " + 1)"
-        file_noads = "split_part(__fn, ':', 1)"
-        ads = (
-            "if(instr(__fn, ':') > 0,"
-            " substr(__fn, instr(__fn, ':') + 1), '')"
-        )
-        ext = "regexp_extract(" + file_noads + ", '\\\\.([^.]+)$', 1)"
-        root = "regexp_extract(__pb, '^([A-Za-z]:)', 1)"
-        bag = (
-            "concat('<',"
-            f" '\"Scheme\":', {_jq(scheme)}, ',',"
-            f" '\"RootPath\":', {_jq(root)}, ',',"
-            f" '\"DirectoryPath\":', {_jq('__dp')}, ',',"
-            f" '\"DirectoryName\":', {_jq(dname)}, ',',"
-            f" '\"Filename\":', {_jq(file_noads)}, ',',"
-            f" '\"Extension\":', {_jq(ext)}, ',',"
-            f" '\"AlternateDataStream\":', {_jq(ads)},"
-            " '>')"
-        ).replace("'<'", "'{'").replace("'>'", "'}'")
-        out = _bind1(dpath, "__dp", bag)
-        out = _bind1(fname, "__fn", out)
-        out = _bind1(_last_sep("__pb"), "__ls", out)
-        out = _bind1(body, "__pb", out)
-        return _bind1(f"cast({p} as string)", "__pp", out)
-
-    s = _rewrite_call(s, "parse_path", _parse_path)
-    # parse_csv: one RFC-4180 record -> array of fields (quoted fields
-    # may contain commas; "" unescapes). Single-line subset.
-    s = _rewrite_call(
-        s, "parse_csv",
-        lambda a: (
-            "transform(regexp_extract_all(concat(',', cast(" + a
-            + " as string)), ',(\"(?:[^\"]|\"\")*\"|[^,]*)', 1),"
-            " __f -> if(substr(__f, 1, 1) = '\"',"
-            " replace(substr(__f, 2, length(__f) - 2), '\"\"', '\"'),"
-            " __f))"
-        ),
-    )
-
-    # format_bytes(size [, precision [, units]]): 1024-based humanize
-    def _format_bytes(sz, prec="0", units=None):
-        u = (
-            "case when __fb >= 1125899906842624 then 'PB'"
-            " when __fb >= 1099511627776 then 'TB'"
-            " when __fb >= 1073741824 then 'GB'"
-            " when __fb >= 1048576 then 'MB'"
-            " when __fb >= 1024 then 'KB' else 'Bytes' end"
-            if units is None
-            else f"upper(cast({units} as string))"
-        )
-        div = (
-            "case " + u + " when 'PB' then 1125899906842624"
-            " when 'TB' then 1099511627776 when 'GB' then 1073741824"
-            " when 'MB' then 1048576 when 'KB' then 1024"
-            " else 1 end"
-        )
-        return _bind1(
-            f"cast({sz} as double)", "__fb",
-            "concat(regexp_replace(cast(round(__fb / " + div
-            + f", cast({prec} as int)) as string),"
-            " '\\\\.0+$', ''), ' ', " + u + ")",
-        )
-
-    s = _rewrite_call(s, "format_bytes", _format_bytes)
-    # totimespan: timespan literals (1d/2h/3m/4s) were rewritten in
-    # phase 1; what reaches here is the string form
-    # '[d.]hh:mm:ss[.fff]' -> SECONDS (the engine's timespan unit,
-    # fractional kept); invalid -> null
-    s = _rewrite_call(
-        s, "totimespan",
-        lambda a: _bind1(
-            f"cast({a} as string)", "__tt",
-            "if(regexp_extract(__tt,"
-            " '^(?:\\\\d+\\\\.)?\\\\d{1,2}:\\\\d{1,2}:\\\\d{1,2}"
-            "(?:\\\\.\\\\d+)?$', 0) = '', cast(null as double),"
-            " coalesce(try_cast(regexp_extract(__tt,"
-            " '^(\\\\d+)\\\\.', 1) as double), 0e0) * 86400"
-            " + cast(regexp_extract(__tt,"
-            " '(\\\\d{1,2}):\\\\d{1,2}:\\\\d{1,2}', 1) as double)"
-            " * 3600"
-            " + cast(regexp_extract(__tt, ':(\\\\d{1,2}):', 1)"
-            " as double) * 60"
-            " + cast(regexp_extract(__tt, ':(\\\\d{1,2})(?:\\\\.|$)',"
-            " 1) as double)"
-            " + coalesce(try_cast(concat('0.', regexp_extract(__tt,"
-            " ':\\\\d{1,2}\\\\.(\\\\d+)$', 1)) as double), 0e0))",
-        ),
-    )
-    # format_timespan(timespan, pattern): the pattern is a constant
-    # (masked literal) compiled at translate time into one concat of
-    # lpad'd integer pieces — d+/h+/m+/s+/f+ runs, everything else a
-    # literal separator. Timespans are the engine's SECONDS unit;
-    # negative values emit a '-' prefix over the absolute value.
-    def _format_timespan(x, pat):
-        mm = re.fullmatch(rf"{chr(0)}L(\d+){chr(0)}", pat.strip())
-        if not mm:
-            raise ValueError(
-                "format_timespan needs a constant pattern literal, got "
-                f"{pat!r}"
-            )
-        p = lits[int(mm.group(1))][1:-1]
-        parts: list[str] = []
-        i = 0
-        while i < len(p):
-            c = p[i]
-            j = i
-            while j < len(p) and p[j] == c:
-                j += 1
-            n = j - i
-            if c == "d":
-                parts.append(
-                    f"lpad(cast(cast(floor(__ft / 86400) as bigint)"
-                    f" as string), {n}, '0')"
-                )
-            elif c == "h":
-                parts.append(
-                    f"lpad(cast(cast(floor(__ft / 3600) % 24 as bigint)"
-                    f" as string), {n}, '0')"
-                )
-            elif c == "m":
-                parts.append(
-                    f"lpad(cast(cast(floor(__ft / 60) % 60 as bigint)"
-                    f" as string), {n}, '0')"
-                )
-            elif c == "s":
-                parts.append(
-                    f"lpad(cast(cast(floor(__ft) % 60 as bigint)"
-                    f" as string), {n}, '0')"
-                )
-            elif c == "f":
-                scale = 10 ** n
-                parts.append(
-                    f"lpad(cast(cast(floor(__ft * {scale}) % {scale}"
-                    f" as bigint) as string), {n}, '0')"
-                )
-            else:
-                lit = c * n
-                parts.append("'" + lit.replace("'", "''") + "'")
-            i = j
-        body = f"concat(if(__fs < 0, '-', ''), {', '.join(parts)})"
-        body = _bind1("abs(__fs)", "__ft", body)
-        return _bind1(f"cast(({x}) as double)", "__fs", body)
-
-    s = _rewrite_call(s, "format_timespan", _format_timespan)
-    # has_any_index(text, terms): 0-based index of the FIRST term the
-    # text contains, -1 if none (Kusto)
-    s = _rewrite_call(
-        s, "has_any_index",
-        lambda t, arr: _bind1(
-            f"cast({t} as string)", "__hx",
-            "coalesce(try_element_at(filter(transform(" + arr + ","
-            " (__e, __i) -> if(instr(__hx, cast(__e as string)) > 0,"
-            " __i, cast(null as int))), __i -> __i is not null), 1),"
-            " -1)",
-        ),
-    )
-    # base64 -> byte array (ints 0-255), via the hex round trip
-    s = _rewrite_call(
-        s, "base64_decode_toarray",
-        lambda a: _bind1(
-            f"hex(unbase64({a}))", "__hb",
-            # empty guard: sequence(1, 0) DESCENDS in Spark
-            "if(length(__hb) = 0, array(),"
-            " transform(sequence(1, length(__hb) div 2), __i ->"
-            " cast(conv(substr(__hb, __i * 2 - 1, 2), 16, 10)"
-            " as bigint)))",
-        ),
-    )
-    # convert_* unit family: both units must be constants (masked
-    # literals) — resolved to exact SI factors at TRANSLATE time, so
-    # the emitted SQL is one multiply (temperature: one affine chain).
-    # Unit names follow Kusto's (UnitsNet) spelling, matched
-    # case-insensitively; an unknown unit raises loudly with the
-    # family's unit list. Documented subset of the common units.
-    _UNIT_FAMILIES: dict[str, dict[str, float]] = {
-        "length": {
-            "meter": 1.0, "kilometer": 1000.0, "centimeter": 0.01,
-            "millimeter": 0.001, "micrometer": 1e-6, "nanometer": 1e-9,
-            "mile": 1609.344, "yard": 0.9144, "foot": 0.3048,
-            "inch": 0.0254, "nauticalmile": 1852.0,
-        },
-        "mass": {
-            "kilogram": 1.0, "gram": 0.001, "milligram": 1e-6,
-            "tonne": 1000.0, "pound": 0.45359237,
-            "ounce": 0.028349523125, "stone": 6.35029318,
-        },
-        "speed": {
-            "meterpersecond": 1.0, "kilometerperhour": 1.0 / 3.6,
-            "mileperhour": 0.44704, "knot": 1852.0 / 3600.0,
-            "footpersecond": 0.3048,
-        },
-        "angle": {
-            "radian": 1.0, "degree": 3.141592653589793 / 180.0,
-            "gradian": 3.141592653589793 / 200.0,
-            "revolution": 2.0 * 3.141592653589793,
-        },
-        "energy": {
-            "joule": 1.0, "kilojoule": 1000.0, "calorie": 4.184,
-            "kilocalorie": 4184.0, "watthour": 3600.0,
-            "kilowatthour": 3.6e6,
-            "britishthermalunit": 1055.05585262,
-        },
-        "force": {
-            "newton": 1.0, "kilonewton": 1000.0,
-            "poundforce": 4.4482216152605, "dyn": 1e-5,
-            "kilogramforce": 9.80665,
-        },
-        "volume": {
-            "cubicmeter": 1.0, "liter": 0.001, "milliliter": 1e-6,
-            "cubicfoot": 0.028316846592,
-            "cubicinch": 1.6387064e-5, "usgallon": 0.003785411784,
-            "imperialgallon": 0.00454609,
-        },
-    }
-
-    def _unit_lit(tok, family):
-        mm = re.fullmatch(rf"{chr(0)}L(\d+){chr(0)}", tok.strip())
-        if not mm:
-            raise ValueError(
-                f"convert_{family} needs constant unit literals, got"
-                f" {tok!r}"
-            )
-        u = lits[int(mm.group(1))][1:-1].strip().lower()
-        fam = _UNIT_FAMILIES[family]
-        if u not in fam:
-            raise ValueError(
-                f"convert_{family}: unknown unit {u!r}"
-                f" (supported: {sorted(fam)})"
-            )
-        return fam[u]
-
-    def _mk_convert(family):
-        def conv(x, ufrom, uto):
-            f, t = _unit_lit(ufrom, family), _unit_lit(uto, family)
-            return f"(cast({x} as double) * {f!r} / {t!r})"
-
-        return conv
-
-    for _fam in _UNIT_FAMILIES:
-        s = _rewrite_call(s, f"convert_{_fam}", _mk_convert(_fam))
-
-    def _convert_temperature(x, ufrom, uto):
-        # affine: go through Kelvin; names per UnitsNet
-        forms = {
-            "kelvin": ("(cast({x} as double))", "({k})"),
-            "degreecelsius": (
-                "(cast({x} as double) + 273.15)", "(({k}) - 273.15)"
-            ),
-            "degreefahrenheit": (
-                "((cast({x} as double) + 459.67) * 5 / 9)",
-                "(({k}) * 9 / 5 - 459.67)",
-            ),
-        }
-
-        def unit(tok):
-            mm = re.fullmatch(rf"{chr(0)}L(\d+){chr(0)}", tok.strip())
-            if not mm:
-                raise ValueError(
-                    "convert_temperature needs constant unit literals,"
-                    f" got {tok!r}"
-                )
-            u = lits[int(mm.group(1))][1:-1].strip().lower()
-            if u not in forms:
-                raise ValueError(
-                    f"convert_temperature: unknown unit {u!r}"
-                    f" (supported: {sorted(forms)})"
-                )
-            return u
-
-        uf, ut = unit(ufrom), unit(uto)
-        to_k = forms[uf][0].format(x=x)
-        return forms[ut][1].format(k=to_k)
-
-    s = _rewrite_call(s, "convert_temperature", _convert_temperature)
-    s = re.sub(r"\bnew_guid\(\s*\)", "uuid()", s)
-    # rand()/rand(n): nondeterministic by definition (like Kusto);
-    # deterministic sampling paths use the hash twins instead
-    s = _rewrite_call(
-        s, "rand",
-        lambda n=None: (
-            "rand()" if n is None
-            else f"cast(floor(rand() * ({n})) as bigint)"
-        ),
-    )
-    # round-10 scalar batch: encodings + calendar + version ordering.
-    # url_encode/url_decode keep their names (Kusto's form-encoding ==
-    # Spark's java.net.URLEncoder semantics, space -> '+').
-    s = _rewrite_call(
-        s, "base64_encode_tostring", lambda a: f"base64(cast({a} as binary))"
-    )
-    s = _rewrite_call(
-        s, "base64_decode_tostring", lambda a: f"cast(unbase64({a}) as string)"
-    )
-    # Kusto translate(searchList, replacementList, text) — Spark wants
-    # (text, from, to): reorder the arguments
-    s = _rewrite_call(s, "translate", lambda a, b, c: f"translate({c}, {a}, {b})")
-    s = re.sub(r"\bmonthofyear\(", "month(", s)
-    s = re.sub(r"\bweek_of_year\(", "weekofyear(", s)  # both ISO 8601
-    # parse_version: Kusto emits a comparable decimal; this engine emits
-    # the ORDER-EQUIVALENT canonical string (each of 4 dot segments
-    # zero-padded to 8, missing segments = 0) — cross-engine checkable,
-    # sorts identically (documented deviation)
-    s = _rewrite_call(
-        s,
-        "parse_version",
-        lambda a: (
-            "array_join(transform(slice(concat(split(" + a + ", '\\\\.'),"
-            " array('0', '0', '0')), 1, 4), __x -> lpad(__x, 8, '0')), '.')"
-        ),
-    )
-    s = re.sub(r"\btostring\(([^()]*)\)", r"cast(\1 as string)", s)
-    # dynamic access FIRST (so casts below see its output): todynamic(
-    # col).a.b / parse_json(col).a.b → get_json_object (string-typed
-    # values, the cross-engine-checkable form; DuckDB twin:
-    # json_extract_string)
-    s = re.sub(
-        r"\b(?:todynamic|parse_json)\((\w+)\)\.(\w+(?:\.\w+)*)",
-        lambda m: f"get_json_object({m.group(1)}, '$.{m.group(2)}')",
-        s,
-    )
-    # type coercions — arg may contain one level of nested call parens
-    _arg = r"([^()]*(?:\([^()]*\)[^()]*)*)"
-    s = re.sub(rf"\btodouble\({_arg}\)", r"cast(\1 as double)", s)
-    s = re.sub(rf"\btolong\({_arg}\)", r"cast(\1 as bigint)", s)
-    s = re.sub(rf"\btoint\({_arg}\)", r"cast(\1 as int)", s)
-    s = re.sub(rf"\btobool\({_arg}\)", r"cast(\1 as boolean)", s)
-    s = re.sub(rf"\btodatetime\({_arg}\)", r"cast(\1 as timestamp)", s)
-    # dayofweek: Kusto returns a timespan of whole days since Sunday
-    # (0=Sun..6=Sat); the int-days form is what queries consume. Runs
-    # BEFORE the calendar truncations — startofweek's template emits a
-    # SPARK dayofweek() that must not be re-interpreted as Kusto's.
-    s = _rewrite_call(s, "dayofweek", lambda a: f"(dayofweek({a}) - 1)")
-    # calendar truncation (KQL weeks start Sunday — dayofweek: Sun=1)
-    s = re.sub(r"\bstartofday\(([^()]*)\)", r"date_trunc('DAY', \1)", s)
-    s = re.sub(r"\bstartofmonth\(([^()]*)\)", r"date_trunc('MONTH', \1)", s)
-    s = re.sub(
-        r"\bstartofweek\(([^()]*)\)",
-        r"cast(date_sub(cast(\1 as date), dayofweek(\1) - 1) as timestamp)",
-        s,
-    )
+    # ---- postfix / literal forms and range / membership operators ---
+    # dynamic indexing: out-of-range/missing-key must be NULL (Kusto)
+    # while Spark's [] throws under ANSI
+    s = _rewrite_dynamic_forms(_rewrite_index_postfix(s))
     # X between (a .. b) → BETWEEN; operands may be let-substituted
     # parenthesized scalars
     _operand = r"((?:[^.()]|\([^()]*\))+?)"
@@ -1803,12 +1969,11 @@ def _expr(kql: str, now: str | None = None) -> str:
     )
     # membership variants: !in -> NOT IN; in~/!in~ -> case-insensitive
     def _ci_in(m, neg=False):
-        body = "lower({}) {} ({})".format(
+        return "lower({}) {} ({})".format(
             m.group(1),
             "NOT IN" if neg else "IN",
             ", ".join(f"lower({a.strip()})" for a in _split_csv(m.group(2))),
         )
-        return body
 
     s = re.sub(
         r"(\w+)\s+!in~\s*\(([^()]*)\)",
@@ -1823,308 +1988,11 @@ def _expr(kql: str, now: str | None = None) -> str:
         r"\1 NOT BETWEEN \2 AND \3",
         s,
     )
-    # series_* scalar functions over make-series arrays → pure
-    # higher-order array SQL (operators/timeseries.py builders); each
-    # pass handles nested same-name calls, the pass SEQUENCE handles
-    # cross-name nesting (an inner call spliced verbatim by an earlier
-    # pass is rewritten by its own later pass)
-    def _unlit(tok: str) -> str:
-        """Unmask a quoted string literal argument (literals are masked
-        to \\0L<i>\\0 before function rewriting) and strip quotes."""
-        tok = tok.strip()
-        mm = re.match(rf"^{chr(0)}L(\d+){chr(0)}$", tok)
-        return (lits[int(mm.group(1))] if mm else tok).strip().strip("'")
-
-    # series_decompose family (round 12): trend-then-seasonal one-pass
-    # decomposition, forecast on a training prefix, top-ACF period
-    # detection — see operators/timeseries.py for the dialect notes.
-    # The trend argument is a quoted literal in Kusto → unmask here.
-    def _series_decompose(a, period=None, trend=None, *rest):
-        if rest:
-            raise ValueError(
-                "series_decompose: only (series [, period [, trend]]) "
-                "is supported (no test_points/seasonality_threshold)"
-            )
-        return series_decompose_sql(
-            a,
-            (period or "-1").strip() or "-1",
-            _unlit(trend) if trend and trend.strip() else "linefit",
-        )
-
-    def _series_decompose_forecast(a, points, period=None, trend=None,
-                                   *rest):
-        if rest:
-            raise ValueError(
-                "series_decompose_forecast: only (series, points "
-                "[, period [, trend]]) is supported"
-            )
-        return series_decompose_forecast_sql(
-            a,
-            points,
-            (period or "-1").strip() or "-1",
-            _unlit(trend) if trend and trend.strip() else "linefit",
-        )
-
-    def _series_decompose_anomalies(a, k=None, period=None, trend=None,
-                                    *rest):
-        if rest:
-            raise ValueError(
-                "series_decompose_anomalies: only (series [, threshold "
-                "[, period [, trend]]]) is supported"
-            )
-        return series_decompose_anomalies_sql(
-            a,
-            (k or "1.5").strip() or "1.5",
-            (period or "0").strip() or "0",
-            _unlit(trend) if trend and trend.strip() else "linefit",
-        )
-
-    s = _rewrite_call(
-        s, "series_decompose_forecast", _series_decompose_forecast
-    )
-    s = _rewrite_call(
-        s, "series_decompose_anomalies", _series_decompose_anomalies
-    )
-    s = _rewrite_call(s, "series_periods_detect", series_periods_detect_sql)
-    s = _rewrite_call(
-        s, "series_periods_validate", series_periods_validate_sql
-    )
-    s = _rewrite_call(s, "series_decompose", _series_decompose)
-    s = _rewrite_call(
-        s, "series_pearson_correlation", series_pearson_correlation_sql
-    )
-    s = _rewrite_call(s, "series_fit_line_dynamic", series_fit_line_sql)
-    # round-13 series additions (see operators/timeseries.py builders)
-    from azuredataengineering_deeplearning_spark.operators.timeseries import (
-        series_cosine_similarity_sql,
-        series_dot_product_sql,
-        series_fill_backward_sql,
-        series_fill_forward_sql,
-        series_fit_2lines_dynamic_sql,
-        series_fit_poly_sql,
-        series_magnitude_sql,
-        series_seasonal_sql,
-    )
-
-    from azuredataengineering_deeplearning_spark.operators.timeseries import (
-        series_fft_sql,
-        series_ifft_sql,
-    )
-
-    s = _rewrite_call(s, "series_fft", series_fft_sql)
-    s = _rewrite_call(s, "series_ifft", series_ifft_sql)
-    s = _rewrite_call(
-        s, "series_fit_2lines_dynamic", series_fit_2lines_dynamic_sql
-    )
-    s = _rewrite_call(s, "series_fit_poly", series_fit_poly_sql)
-    s = _rewrite_call(s, "series_dot_product", series_dot_product_sql)
-    s = _rewrite_call(s, "series_magnitude", series_magnitude_sql)
-    s = _rewrite_call(
-        s, "series_cosine_similarity", series_cosine_similarity_sql
-    )
-    s = _rewrite_call(s, "series_seasonal", series_seasonal_sql)
-    s = _rewrite_call(s, "series_fill_forward", series_fill_forward_sql)
-    s = _rewrite_call(s, "series_fill_backward", series_fill_backward_sql)
-    s = _rewrite_call(s, "series_stats_dynamic", series_stats_dynamic_sql)
-    s = _rewrite_call(s, "series_fill_linear", series_fill_linear_sql)
-    s = _rewrite_call(s, "series_fill_const", series_fill_const_sql)
-    s = _rewrite_call(s, "series_moving_avg", series_moving_avg_sql)
-    s = _rewrite_call(s, "series_fir", series_fir_sql)
-    s = _rewrite_call(s, "series_iir", series_iir_sql)
-    # elementwise series arithmetic: pure transform/zip_with — O(n) per
-    # row, zero shuffles. Operands are arrays of equal length (Kusto);
-    # divide uses try_divide so a zero element yields null, not an
-    # ANSI error. Cast to double so int series and double series mix.
-    for _sf, _ex in (
-        ("series_abs", "abs(__x)"),
-        ("series_exp", "exp(__x)"),
-        ("series_log", "ln(__x)"),
-        ("series_sign", "sign(cast(__x as double))"),
-        ("series_not", "cast(NOT cast(__x as boolean) as double)"),
-        # round-13 elementwise trig (closes the documented Kusto set)
-        ("series_cos", "cos(cast(__x as double))"),
-        ("series_sin", "sin(cast(__x as double))"),
-        ("series_tan", "tan(cast(__x as double))"),
-        ("series_acos", "acos(cast(__x as double))"),
-        ("series_asin", "asin(cast(__x as double))"),
-        ("series_atan", "atan(cast(__x as double))"),
-    ):
-        s = _rewrite_call(
-            s,
-            _sf,
-            lambda a, t=_ex: (
-                f"transform({a}, __x -> cast({t} as double))"
-            ),
-        )
-    for _sf, _ex in (
-        ("series_add", "cast(__x as double) + cast(__y as double)"),
-        ("series_subtract", "cast(__x as double) - cast(__y as double)"),
-        ("series_multiply", "cast(__x as double) * cast(__y as double)"),
-        ("series_divide", "try_divide(cast(__x as double), cast(__y as double))"),
-        # round 13: elementwise power (null on 0^negative etc. follows
-        # Spark's pow semantics — NaN, matching IEEE, not an error)
-        ("series_pow", "pow(cast(__x as double), cast(__y as double))"),
-    ):
-        s = _rewrite_call(
-            s,
-            _sf,
-            lambda a, b, t=_ex: (
-                f"zip_with({a}, {b}, (__x, __y) -> cast({t} as double))"
-            ),
-        )
-    # common Kusto scalar family (balanced-paren rewrites; string
-    # literals are masked placeholders here, inert in the templates).
-    # KQL string indexing is 0-BASED: substring/indexof shift by one
-    # against Spark's 1-based substr/instr (instr's 0-means-absent
-    # becomes KQL's -1 for free).
-    s = _rewrite_call(
-        s, "replace_string", lambda a, b, c: f"replace({a}, {b}, {c})"
-    )
-    s = _rewrite_call(
-        s,
-        "substring",
-        lambda a, b, c=None: (
-            f"substr({a}, CAST({b} AS INT) + 1"
-            + (f", CAST({c} AS INT))" if c is not None else ")")
-        ),
-    )
-    s = _rewrite_call(s, "indexof", lambda a, b: f"(instr({a}, {b}) - 1)")
-    s = re.sub(r"\bstrcat_delim\(", "concat_ws(", s)
-    s = re.sub(r"\bmin_of\(", "least(", s)
-    s = re.sub(r"\bmax_of\(", "greatest(", s)
-    s = re.sub(r"\bceiling\(", "ceil(", s)
-    s = re.sub(r"\barray_concat\(", "concat(", s)
-    # array_slice(arr, start, end): Kusto END-INCLUSIVE 0-based ->
-    # Spark slice(arr, start+1, length)
-    s = _rewrite_call(
-        s,
-        "array_slice",
-        lambda a, b, c: (
-            f"slice({a}, CAST({b} AS INT) + 1,"
-            f" CAST({c} AS INT) - CAST({b} AS INT) + 1)"
-        ),
-    )
-    # array_index_of: 0-based position, -1 absent (array_position is
-    # 1-based, 0 absent)
-    s = _rewrite_call(
-        s, "array_index_of", lambda a, b: f"(array_position({a}, {b}) - 1)"
-    )
-    s = re.sub(r"\bpack_array\(", "array(", s)
-    # dynamic literals: dynamic([...]) is an array literal -> array();
-    # dynamic({...}) is a property bag -> the engine's JSON-string bag
-    # form (same representation pack()/bag_unpack use). Scalars inside
-    # arrive masked/quoted already; the bag form keeps one level of
-    # braces (nested bags stay inside the JSON text).
-    s = re.sub(r"\bdynamic\(\s*\[([^\]]*)\]\s*\)", r"array(\1)", s)
-    s = re.sub(r"\bdynamic\(\s*(\{.*?\})\s*\)", r"'\1'", s)
-    # pack('k1', v1, ...)/pack_all(): property bag -> JSON string (the
-    # engine's bag representation everywhere — bag_unpack reverses it)
-    s = _rewrite_call(
-        s,
-        "pack",
-        lambda *args: f"to_json(named_struct({', '.join(args)}))",
-    )
-    s = re.sub(r"\bpack_all\(\s*\)", "to_json(struct(*))", s)
-    s = _rewrite_call(
-        s,
-        "isfinite",
-        lambda a: f"(NOT isnan({a}) AND abs({a}) != double('Infinity'))",
-    )
-    s = _rewrite_call(s, "isinf", lambda a: f"(abs({a}) = double('Infinity'))")
-    s = _rewrite_call(s, "todecimal", lambda a: f"cast({a} as decimal(38,18))")
-    # numeric bin(x, size) / floor(x, size): Kusto floor IS bin — round
-    # down to a multiple of size (the datetime form was rewritten in
-    # phase 1; anything still here is numeric)
-    for _fn in ("bin", "floor"):
-        s = _rewrite_call(
-            s,
-            _fn,
-            lambda *a: (
-                f"(floor({a[0]} / {a[1]}) * {a[1]})"
-                if len(a) == 2
-                else f"floor({a[0]})"
-            ),
-        )
-    s = re.sub(r"\bformat_datetime\(", "date_format(", s)
-    # string_size = BYTES (length() is characters in both engines)
-    s = re.sub(r"\bstring_size\(", "octet_length(", s)
-    s = _rewrite_call(
-        s, "array_length", lambda a: f"cast(size({a}) as bigint)"
-    )
-    # tohex: Kusto emits lowercase; Spark hex() is uppercase
-    s = _rewrite_call(s, "tohex", lambda a: f"lower(hex({a}))")
-    # hash(x[, mod]): Kusto's xxhash64-based scalar hash — mapped to
-    # Spark's xxhash64 (same family, DIFFERENT seed/values than Kusto;
-    # stable within the engine, documented dialect deviation). `\bhash`
-    # cannot match inside xxhash64 ('x' is a word char).
-    s = _rewrite_call(
-        s,
-        "hash",
-        lambda a, m=None: (
-            f"pmod(xxhash64({a}), {m})" if m is not None else f"xxhash64({a})"
-        ),
-    )
-    # endofday/endofmonth: last representable instant (micro grain)
-    s = _rewrite_call(
-        s,
-        "endofday",
-        lambda a: (
-            f"(date_trunc('DAY', {a}) + interval 1 day"
-            " - interval 1 microsecond)"
-        ),
-    )
-    s = _rewrite_call(
-        s,
-        "endofmonth",
-        lambda a: (
-            f"(cast(last_day({a}) as timestamp) + interval 1 day"
-            " - interval 1 microsecond)"
-        ),
-    )
-    s = _rewrite_call(s, "isnotempty", lambda a: f"({a} IS NOT NULL AND {a} != '')")
-    s = _rewrite_call(s, "isempty", lambda a: f"({a} IS NULL OR {a} = '')")
-    s = _rewrite_call(s, "isnotnull", lambda a: f"({a} IS NOT NULL)")
-    s = _rewrite_call(s, "isnull", lambda a: f"({a} IS NULL)")
-    s = _rewrite_call(s, "getyear", lambda a: f"year({a})")
-    s = _rewrite_call(s, "getmonth", lambda a: f"month({a})")
-    s = _rewrite_call(s, "hourofday", lambda a: f"hour({a})")
-    s = _rewrite_call(s, "startofyear", lambda a: f"date_trunc('YEAR', {a})")
-    # datetime_diff counts period BOUNDARIES crossed (Kusto/DuckDB
-    # date_diff convention, NOT elapsed units): truncate both operands
-    # to the period before differencing. Unit arrives masked — look it
-    # up. Weeks are ISO-Monday here (Kusto weeks start Sunday).
-    def _dt_diff(unit, a, b):
-        u = unit
-        mm = re.match(rf"^{chr(0)}L(\d+){chr(0)}$", unit.strip())
-        if mm:
-            u = lits[int(mm.group(1))]
-        u = u.strip().strip("'").upper()
-        return (
-            f"timestampdiff({u}, date_trunc('{u}', {b}),"
-            f" date_trunc('{u}', {a}))"
-        )
-
-    s = _rewrite_call(s, "datetime_diff", _dt_diff)
-    # bin_at(x, 1h, anchor): bin aligned to an arbitrary fixed point
-    # rather than the epoch
-    def _bin_at(x, size, anchor):
-        bm = re.match(r"^(\d+)([dhms])$", size.strip())
-        if not bm:
-            raise ValueError(f"bin_at needs a timespan size: {size!r}")
-        sec = _timespan_s(bm.group(1), bm.group(2))
-        a = f"unix_timestamp({anchor})"
-        return (
-            f"timestamp_seconds(floor((unix_timestamp({x}) - {a})"
-            f" / {sec}) * {sec} + {a})"
-        )
-
-    s = _rewrite_call(s, "bin_at", _bin_at)
-    s = _rewrite_case(s)
-    s = re.sub(r"==", "=", s)
-    s = re.sub(r"\bdatetime\(([^)]+)\)", r"timestamp'\1'", s)
-    # ---- restore literals --------------------------------------------
-    s = re.sub(rf"{chr(0)}L(\d+){chr(0)}", lambda m: lits[int(m.group(1))], s)
-    return s
+    # ---- phase 2: every function call, one inside-out pass ----------
+    now_sql = f"timestamp'{now}'" if now else "current_timestamp()"
+    s = _scan_calls(s, _CALLS, lits, now_sql)
+    s = s.replace("==", "=")
+    return _unmask(s, lits)
 
 
 def _rewrite_index_postfix(s: str) -> str:
@@ -2267,61 +2135,6 @@ def _bind1(arg: str, var: str, body: str) -> str:
     shadows), but callers that splice user text should pick fresh
     names."""
     return f"element_at(transform(array(({arg})), {var} -> {body}), 1)"
-
-
-def _rewrite_call(s: str, name: str, build) -> str:
-    """Rewrite every ``name(args...)`` call in ``s`` via ``build(*args)``.
-    Balanced-paren scan (args may contain nested calls); each argument
-    is recursively rewritten first so same-name nesting resolves
-    inside-out."""
-    out: list[str] = []
-    i = 0
-    while True:
-        m = re.search(rf"\b{name}\s*\(", s[i:])
-        if not m:
-            out.append(s[i:])
-            break
-        start = i + m.start()
-        out.append(s[i:start])
-        j, depth = i + m.end(), 1
-        while j < len(s) and depth:
-            depth += (s[j] == "(") - (s[j] == ")")
-            j += 1
-        args = [
-            _rewrite_call(a, name, build).strip()
-            for a in _split_csv(s[i + m.end() : j - 1])
-        ]
-        out.append(f"({build(*args)})")
-        i = j
-    return "".join(out)
-
-
-def _rewrite_case(s: str) -> str:
-    """KQL ``case(p1, v1, p2, v2, ..., default)`` → SQL CASE WHEN.
-    Balanced-paren scan so nested calls survive."""
-    out = []
-    i = 0
-    while True:
-        m = re.search(r"\bcase\s*\(", s[i:])
-        if not m:
-            out.append(s[i:])
-            break
-        start = i + m.start()
-        out.append(s[i:start])
-        j, depth = i + m.end(), 1
-        while j < len(s) and depth:
-            depth += (s[j] == "(") - (s[j] == ")")
-            j += 1
-        args = [_rewrite_case(a) for a in _split_csv(s[i + m.end() : j - 1])]
-        if len(args) < 3 or len(args) % 2 == 0:
-            raise ValueError(f"case() needs pred,val pairs + default: {args}")
-        sql = "CASE"
-        for k in range(0, len(args) - 1, 2):
-            sql += f" WHEN {args[k]} THEN {args[k + 1]}"
-        sql += f" ELSE {args[-1]} END"
-        out.append(sql)
-        i = j
-    return "".join(out)
 
 
 # stages with no streaming-legal plan: global sorts/top-k need a total
@@ -2480,8 +2293,8 @@ def kql_to_df(
             return _scalar_literal(rows[0][0])
 
         q = _ts_restore(
-            _rewrite_call(re.sub(r"'[^']*'", _ts_mask, q), "toscalar",
-                          _toscalar)
+            _scan_calls(re.sub(r"'[^']*'", _ts_mask, q),
+                        {"toscalar": _toscalar})
         )
     stages = _split_pipe(q)
     if not stages:
@@ -5196,7 +5009,7 @@ def _hoist_row_ranks(
     offsets, lazy within-bucket windows — never an unpartitioned
     window, no checkpoint, no self-join.
 
-    Extraction is paren-BALANCED (:func:`_rewrite_call`), so nested
+    Extraction is paren-BALANCED (:func:`_scan_calls`), so nested
     calls like ``row_rank_dense(tolower(t))`` resolve instead of
     falling through to an opaque Spark 'undefined function' error.
     Returns ``(df, rewritten_assigns, hidden_cols_to_drop)``."""
@@ -5226,8 +5039,10 @@ def _hoist_row_ranks(
 
     rewritten: list[tuple[str, str]] = []
     for name, body in assigns:
-        body = _rewrite_call(body, "row_rank_dense", _take("dense"))
-        body = _rewrite_call(body, "row_rank_min", _take("min"))
+        body = _scan_calls(
+            body,
+            {"row_rank_dense": _take("dense"), "row_rank_min": _take("min")},
+        )
         if re.search(r"\brow_rank_\w+\s*\(", body):
             raise ValueError(
                 f"unsupported row_rank function in {body!r}: only "
@@ -5298,7 +5113,7 @@ def _extend_one(
             calls.append((alias, list(args)))
             return alias
 
-        body = _rewrite_call(body, "row_cumsum", _take)
+        body = _scan_calls(body, {"row_cumsum": _take})
         for alias, args in calls:
             restart = args[1] if len(args) > 1 else None
             work = df.withColumn("__kqlcs_v", F.expr(_expr(args[0], now)))

@@ -360,29 +360,27 @@ def _rewrite_path_fns(txt: str, path_vars: list[str], edge_cols: list[str]):
     if not path_vars:
         return txt
     from azuredataengineering_deeplearning_spark.sources.kql import (
-        _rewrite_call,
+        _scan_calls,
     )
 
     colpat = r"\b(" + "|".join(re.escape(c) for c in edge_cols) + r")\b"
 
-    def _bind(body: str) -> str:
-        return re.sub(colpat, r"__x.\1", body)
+    def _hof(name, hof):
+        def build(a, b=None):
+            if b is None:
+                return f"{name}({a})"
+            if a not in path_vars:
+                return f"{name}({a}, {b})"
+            body = re.sub(colpat, r"__x.\1", b)
+            return f"{hof}({a}, __x -> {body})"
 
-    for name, hof in (("map", "transform"), ("all", "forall"),
-                      ("any", "exists")):
-        txt = _rewrite_call(
-            txt,
-            name,
-            lambda a, b=None, n=name, h=hof: (
-                f"{n}({a})" if b is None
-                else (
-                    f"{h}({a}, __x -> {_bind(b)})"
-                    if a.strip() in path_vars
-                    else f"{n}({a}, {b})"
-                )
-            ),
-        )
-    return txt
+        return build
+
+    return _scan_calls(txt, {
+        "map": _hof("map", "transform"),
+        "all": _hof("all", "forall"),
+        "any": _hof("any", "exists"),
+    })
 
 
 def _finish(

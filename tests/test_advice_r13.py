@@ -1,7 +1,8 @@
 """Regression pins for the round-13 ADVICE items.
 
 1. medium — the dynamic countof rewrite ran in phase 1 (pre-masking)
-   through _rewrite_call, whose balanced-paren scan is not
+   through the balanced-paren call rewriter (since replaced by the
+   single-pass call scanner, _scan_calls), which was not
    quote-aware: a quoted term containing '(' or ')' with a
    non-identifier first arg mangled the SQL
    (countof(tostring(x), ':)') emitted replace(cast(x as string),

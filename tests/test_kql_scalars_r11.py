@@ -3,6 +3,8 @@ uniform data cannot reach: negative/oversized shift and rotate counts,
 array_iff length mismatch, empty replace_strings, extract_json typed
 casts + loud errors, iif alias."""
 
+import datetime
+
 import pytest
 
 from azuredataengineering_deeplearning_spark.sources.kql import kql_to_df
@@ -267,3 +269,29 @@ def test_series_iir_recursion_and_edges(spark):
         "series_iir(pack_array(1.0, 2.0), dynamic([1]),"
         " dynamic([0, 1]))",
     ) == [None, None]
+
+
+@pytest.mark.parametrize(
+    "expr, want",
+    [
+        # every call translates once, inside-out: an inner call never
+        # hides an outer call from its own rewrite
+        ("split(tolower('Www.Example.COM'), '.')", ["www", "example", "com"]),
+        ("extract('([0-9]+)', 1, tolower('ID-42X'))", "42"),
+        ("tostring(strlen('hello'))", "5"),
+        (
+            "startofday(todatetime('2024-03-05 17:45:00'))",
+            datetime.datetime(2024, 3, 5),
+        ),
+        ("todouble(tolong(strlen('hello')))", 5.0),
+        # a registered call with the wrong number of arguments fails at
+        # translate time, naming the function and its offset
+        ("1 + substring('abc')", ValueError(r"substring\(\) at offset 4")),
+    ],
+)
+def test_nested_calls_match_kusto(spark, expr, want):
+    if isinstance(want, ValueError):
+        with pytest.raises(ValueError, match=str(want)):
+            _one(spark, expr)
+    else:
+        assert _one(spark, expr) == want
